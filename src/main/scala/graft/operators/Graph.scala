@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Iterative graph ranking over a relation-derived edge set — the
   * domain/source ranking signal a crawl-curation stack keeps next to its
@@ -133,23 +133,16 @@ object Graph {
   val ComponentsSupport = 2
 
   /** Memoized, localCheckpointed support-graph edge list — the SERVED
-    * GRAPH posture (Similarity.cellStore's discipline, session
-    * identity in the key): components, label propagation, and any
-    * future consumer share ONE materialization per (session, corpus,
-    * support) instead of re-deriving the lineitem pair-explode per
-    * query. At 100 TB the edge list is a written table; in-JVM the
-    * checkpoint is its stand-in.
+    * GRAPH posture: components, label propagation, and any future
+    * consumer share ONE materialization per (session, corpus, support)
+    * instead of re-deriving the lineitem pair-explode per query. At
+    * 100 TB the edge list is a written table; in-JVM the checkpoint is
+    * its stand-in.
     */
-  private val edgeStore =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def clearEdgeStore(): Unit = edgeStore.clear()
-
   def supportedEdges(s: SparkSession, dir: String,
                      minSupport: Int = ComponentsSupport): DataFrame =
-    edgeStore.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir + "|" + minSupport,
-      _ => supportedEdgesUncached(s, dir, minSupport).localCheckpoint())
+    Memo(s, ("Graph.supportedEdges", dir, minSupport))(
+      supportedEdgesUncached(s, dir, minSupport).localCheckpoint())
 
   private def supportedEdgesUncached(s: SparkSession, dir: String,
                                      minSupport: Int): DataFrame =

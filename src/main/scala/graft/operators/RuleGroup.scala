@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicReference
+import graft.Memo
 
 /** RULE GROUPS — N rules, ONE scan (round 17; VERDICT r16 #3).
   * Prometheus evaluates a rule group per interval: every alerting and
@@ -125,7 +127,7 @@ object RuleGroup {
         }
       }
     }
-    lastScanPaths.put(System.identityHashCode(s),
+    lastScanPaths(s).set(
       passes.flatMap { case (outs, _, paths) =>
         outs.keys.map(_ -> paths) }.toMap)
     passes.flatMap(_._1).toMap
@@ -137,8 +139,8 @@ object RuleGroup {
     * of the pass's eager-checkpoint materialization. Replaced on every
     * evaluate() — bounded like the old one-live-frame cache was.
     */
-  private[graft] val lastScanPaths =
-    new java.util.concurrent.ConcurrentHashMap[Int, Map[String, Set[String]]]()
+  private[graft] def lastScanPaths(s: SparkSession): AtomicReference[Map[String, Set[String]]] =
+    Memo(s, "RuleGroup.lastScanPaths")(new AtomicReference(Map.empty[String, Set[String]]))
 
   private def scanPathsOf(
       qe: org.apache.spark.sql.execution.QueryExecution): Set[String] = {

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** IN-ENGINE BPE tokenizer TRAINING — the byte-pair-encoding merge loop
   * (Sennrich et al. 2016, the construction behind GPT/LLaMA-family
@@ -75,18 +75,15 @@ object Bpe {
 
   final case class Merge(m: Long, x: String, y: String, cnt: Long)
 
-  /** Learned-merge store keyed by (sf dir, rounds) — same shape as
-    * Dedup's collapsed-contents store: train once per corpus, serve
+  /** Learned merges, memoized per (session, sf dir, rounds) — same
+    * shape as Dedup's collapsed contents: train once per corpus, serve
     * bpe_train / bpe_tokens / bpe_vocab from the one model (the
     * train-once-tokenize-many lifecycle a real tokenizer has). The
     * value is the MODEL (≤ `merges` rows), never data.
     */
-  private val mergeStore =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-
   def learnedMerges(s: SparkSession, dir: String,
                     merges: Int = Merges): Seq[Merge] =
-    mergeStore.computeIfAbsent((dir, merges), _ => {
+    Memo(s, ("Bpe.learnedMerges", dir, merges)) {
       // Adaptive trainer split, the standard BPE production shape: the
       // corpus reduces ONCE to (word, freq) — the only corpus-sized
       // pass — then the merge loop runs wherever the VOCABULARY fits.
@@ -99,7 +96,7 @@ object Bpe {
       if (head.length <= DriverVocabCap)
         driverLoop(head.map(r => (r.getString(0), r.getLong(1))), merges)
       else trainLoop(s, dir, merges)
-    })
+    }
 
   /** Vocabulary size up to which the merge loop runs on the driver. */
   val DriverVocabCap = 200000

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Par, Tables}
 
 /** Corpus-curation operators: the last-mile steps between a cleaned
   * corpus and a training run — eval-set decontamination and sequence
@@ -44,9 +44,6 @@ object Curation {
     */
   def contamination(s: SparkSession, dir: String,
                     maxShingleFreq: Long = 0L): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // split is a pure function of doc_id (sampleSplit's projection) —
     // project it on the scan instead of self-joining documents back on
     // (optimization r18, guide §2.4: one scan + one join less)
@@ -65,32 +62,31 @@ object Curation {
     // shuffle bytes (guide §2.3).
     // per-content membership: train docs carry the output rows, eval
     // docs weight the n_eval_docs sum
-    val perContentF = Future(docs.groupBy("chash").agg(
-      sum(when(col("split") === "train", 1L).otherwise(0L)).as("n_train"),
-      sum(when(col("split") =!= "train", 1L).otherwise(0L)).as("n_eval"))
-      .localCheckpoint())
-    val shCF = Future {
-      val contents = Tables.documents(s, dir)
-        .groupBy(unhex(md5(col("text"))).as("chash"))
-        .agg(min("text").as("text"))
-      val shAll = contents
-        .select(col("chash"),
-          expr("filter(split(text, ' '), w -> w <> '')").as("ws"))
-        .select(col("chash"), explode(Dedup.shinglesOf("ws")).as("sh"))
-        .select(col("chash"), unhex(md5(col("sh"))).as("h"))
-        .distinct()
-      (if (maxShingleFreq <= 0L) shAll
-       else {
-         // per-shingle content frequency as ONE window over the same
-         // pass (the groupBy + semi-join-back form re-ran the shingle
-         // explode twice inside this job)
-         val wf = org.apache.spark.sql.expressions.Window.partitionBy("h")
-         shAll.withColumn("__f", count(lit(1)).over(wf))
-           .filter(col("__f") <= maxShingleFreq).drop("__f")
-       }).localCheckpoint()
-    }
-    val perContent = Await.result(perContentF, Duration.Inf)
-    val shC = Await.result(shCF, Duration.Inf)
+    val (perContent, shC) = Par.both(s)(
+      docs.groupBy("chash").agg(
+        sum(when(col("split") === "train", 1L).otherwise(0L)).as("n_train"),
+        sum(when(col("split") =!= "train", 1L).otherwise(0L)).as("n_eval"))
+        .localCheckpoint(),
+      {
+        val contents = Tables.documents(s, dir)
+          .groupBy(unhex(md5(col("text"))).as("chash"))
+          .agg(min("text").as("text"))
+        val shAll = contents
+          .select(col("chash"),
+            expr("filter(split(text, ' '), w -> w <> '')").as("ws"))
+          .select(col("chash"), explode(Dedup.shinglesOf("ws")).as("sh"))
+          .select(col("chash"), unhex(md5(col("sh"))).as("h"))
+          .distinct()
+        (if (maxShingleFreq <= 0L) shAll
+         else {
+           // per-shingle content frequency as ONE window over the same
+           // pass (the groupBy + semi-join-back form re-ran the shingle
+           // explode twice inside this job)
+           val wf = org.apache.spark.sql.expressions.Window.partitionBy("h")
+           shAll.withColumn("__f", count(lit(1)).over(wf))
+             .filter(col("__f") <= maxShingleFreq).drop("__f")
+         }).localCheckpoint()
+      })
     val trainSh = shC.join(
       perContent.filter(col("n_train") > 0L).select("chash"), "chash")
     val evalSh = shC.join(
@@ -771,17 +767,13 @@ object Curation {
       .withColumn("bucket", expr(
         s"cast(conv(substring(md5(g), 1, 4), 16, 10) as bigint) % $DsirBuckets"))
 
-  /** Served-weights store keyed by (session, dir) — the truthStore /
-    * collapsed-contents discipline: doc_dsir and doc_dsir_sample share
-    * ONE scored frame instead of re-running the gram pass per entry.
+  /** Served weights, memoized per (session, dir): doc_dsir and
+    * doc_dsir_sample share ONE scored frame instead of re-running the
+    * gram pass per entry.
     */
-  private val dsirStore =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def dsirWeights(s: SparkSession, dir: String): DataFrame =
-    dsirStore.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir,
-      _ => dsirWeightsUncached(s, dir).localCheckpoint())
+    Memo(s, ("Curation.dsirWeights", dir))(
+      dsirWeightsUncached(s, dir).localCheckpoint())
 
   private def dsirWeightsUncached(s: SparkSession, dir: String): DataFrame = {
     def qln(c: Column): Column =

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Par, Tables}
 
 /** Deduplication operators for the documents table — the training-data
   * pipeline side of the engine.
@@ -66,19 +66,10 @@ object Dedup {
     * the memo every OPERATOR re-runs the groupBy (measured: the
     * 1.3-1.6x base-scale bench flags vs baseline). A real pipeline
     * writes its exact-dedup table once and reads it everywhere; this is
-    * the in-JVM equivalent — a store, not a cache (never evicted;
-    * size bounded by distinct contents, the same posture as the
-    * checkpoint itself).
+    * the in-JVM equivalent, held until the application ends.
     */
-  private val collapsedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def dirKey(s: SparkSession, dir: String): String =
-    System.identityHashCode(s).toHexString + "|" + dir
-
   private[pipeline] def collapsed(s: SparkSession, dir: String): DataFrame =
-    collapsedMemo.computeIfAbsent(dirKey(s, dir),
-      _ => contents(s, dir).localCheckpoint(true))
+    Memo(s, ("Dedup.collapsed", dir))(contents(s, dir).localCheckpoint(true))
   // NOT spread at the store (measured, optimization r18): repartitioning
   // the checkpointed store to defaultParallelism made the heavy gram
   // chains parallel but taxed the store's many SMALL consumers
@@ -160,12 +151,9 @@ object Dedup {
     * content pairs, and both minhash_lsh and the verify family consume
     * it — one band join per session instead of four.
     */
-  private val candMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-
-  private def contentCandidates(key: String, c: DataFrame,
+  private def contentCandidates(s: SparkSession, dir: String, c: DataFrame,
                                 numBands: Int, rowsPerBand: Int): (DataFrame, DataFrame) =
-    candMemo.computeIfAbsent(s"$key|$numBands|$rowsPerBand", _ => {
+    Memo(s, ("Dedup.candidates", dir, numBands, rowsPerBand)) {
       val ex = bands(c, numBands, rowsPerBand)
       val pairs = ex.as("l").join(ex.as("r"),
           col("l.band") === col("r.band") &&
@@ -175,7 +163,7 @@ object Dedup {
         .distinct()
       (pairs.localCheckpoint(true),
         ex.select("cid").distinct().localCheckpoint(true))
-    })
+    }
 
   /** LSH candidate pairs: docs sharing any band. Collapse-first: the
     * band self-join runs over distinct contents; identical docs (which
@@ -185,7 +173,7 @@ object Dedup {
   def minhashLsh(s: SparkSession, dir: String,
                  numBands: Int = 4, rowsPerBand: Int = 2): DataFrame = {
     val c = collapsed(s, dir)
-    val (pairs, banded) = contentCandidates(dirKey(s, dir), c, numBands, rowsPerBand)
+    val (pairs, banded) = contentCandidates(s, dir, c, numBands, rowsPerBand)
     val diagonal = c.filter(col("n_docs") >= 2)
       .join(banded, "cid").select("cid")
     expandPairs(pairs, diagonal, contentDocs(s, dir, c), Seq.empty)
@@ -199,7 +187,7 @@ object Dedup {
     */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
     val c = collapsed(s, dir)
-    val (crossC, diagC) = verifiedContentPairs(dirKey(s, dir), c)
+    val (crossC, diagC) = verifiedContentPairs(s, dir, c)
     expandPairs(crossC, diagC, contentDocs(s, dir, c), Seq("jaccard"))
   }
 
@@ -276,7 +264,7 @@ object Dedup {
     */
   def nearDupContents(s: SparkSession, dir: String): DataFrame = {
     val c = collapsed(s, dir)
-    val (crossC, diagC) = verifiedContentPairs(dirKey(s, dir), c)
+    val (crossC, diagC) = verifiedContentPairs(s, dir, c)
     val nd = c.select(col("cid"), col("n_docs"))
     val cross = crossC
       .join(nd.as("na"), col("c1") === col("na.cid"))
@@ -296,14 +284,12 @@ object Dedup {
     * set, so the shingle intersection join runs once per session, not
     * three times. Output bounded by verified content pairs.
     */
-  private val verifiedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-
-  private def verifiedContentPairs(key: String, c: DataFrame): (DataFrame, DataFrame) =
-    verifiedMemo.computeIfAbsent(key, _ => {
+  private def verifiedContentPairs(s: SparkSession, dir: String,
+                                   c: DataFrame): (DataFrame, DataFrame) =
+    Memo(s, ("Dedup.verified", dir)) {
       val sh = contentShingles(c)
       val counts = sh.groupBy("cid").agg(count(lit(1)).as("n"))
-      val (candC, banded) = contentCandidates(key, c, 4, 2)
+      val (candC, banded) = contentCandidates(s, dir, c, 4, 2)
       val inter = candC
         .join(sh.as("a"), col("c1") === col("a.cid"))
         .join(sh.as("b"),
@@ -318,7 +304,7 @@ object Dedup {
       val diagC = c.filter(col("n_docs") >= 2)
         .join(banded, "cid").select(col("cid"), lit(1.0).as("jaccard"))
       (crossC.localCheckpoint(true), diagC.localCheckpoint(true))
-    })
+    }
 
   /** (doc_id, simhash): 16-bit SimHash from per-token md5 bits (tokens
     * with multiplicity). All-integer arithmetic → exact across engines.
@@ -639,7 +625,7 @@ object Dedup {
     // diagonal-only contents enter as self-edges so lone duplicate
     // groups still form their cluster.
     val c = collapsed(s, dir)
-    val (crossC, diagC) = verifiedContentPairs(dirKey(s, dir), c)
+    val (crossC, diagC) = verifiedContentPairs(s, dir, c)
     val edges = crossC.select(col("c1").as("id1"), col("c2").as("id2"))
       .unionAll(diagC.select(col("cid").as("id1"), col("cid").as("id2")))
     val labels = clustersFromEdges(edges)._1
@@ -746,11 +732,8 @@ object Dedup {
     * table once and reads it everywhere. Size bounded by the corpus
     * (one row per vector), the tag by distinct vectors.
     */
-  private val vecMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def taggedVecs(s: SparkSession, dir: String): DataFrame =
-    vecMemo.computeIfAbsent(dirKey(s, dir), _ =>
+    Memo(s, ("Dedup.taggedVecs", dir))(
       tagVecs(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
         .localCheckpoint(true))
 
@@ -1111,15 +1094,11 @@ object Dedup {
     // construction (whose own eager materializations are independent
     // jobs) — guide §2.6, optimization r18: the r17 form serialized
     // four checkpoint jobs on the record's critical path.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val simsF = Future(simhashPerDoc(s, dir)
-      .withColumn("bucket", splitBucket(col("doc_id")))
-      .localCheckpoint())
-    val embLegsF = Future(
+    val (sims, embLegs) = Par.both(s)(
+      simhashPerDoc(s, dir)
+        .withColumn("bucket", splitBucket(col("doc_id")))
+        .localCheckpoint(),
       admissionRecallEmb(s, dir, corpusPct, numPlanes, threshold))
-    val sims = Await.result(simsF, Duration.Inf)
     val ihashes = sims.filter(col("bucket") < corpusPct)
       .select(col("simhash").as("ihash")).distinct()
     val delta = sims.filter(col("bucket") >= corpusPct)
@@ -1145,7 +1124,7 @@ object Dedup {
         Seq("doc_id"), "left")
       .select(lit("simhash_block").as("method"), col("doc_id").as("id"),
         col("n_truth"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-    simLeg.unionAll(Await.result(embLegsF, Duration.Inf))
+    simLeg.unionAll(embLegs)
       .withColumn("recall",
         col("n_hits").cast("double") / col("n_truth").cast("double"))
   }
@@ -1175,21 +1154,17 @@ object Dedup {
     // guide §2.6 — the r17 form ran them back to back, and on the raw
     // record the serialized job latency was the measured regression):
     // critical path = max(index, delta) instead of their sum.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val vidxF = Future(embAdmissionIndex(
-      emb.filter(col("split") < corpusPct).select("vec_id", "embedding"),
-      numPlanes).localCheckpoint())
-    val vdeltaF = Future(emb.filter(col("split") >= corpusPct)
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.VectorOps.dot(col("embedding"), col("embedding"))
-          .as("norm"),
-        Similarity.signSketch(col("embedding"), 0).as("qs0"),
-        Similarity.signSketch(col("embedding"), 1).as("qs1"))
-      .localCheckpoint())
-    val vidx = Await.result(vidxF, Duration.Inf)
-    val vdelta = Await.result(vdeltaF, Duration.Inf)
+    val (vidx, vdelta) = Par.both(s)(
+      embAdmissionIndex(
+        emb.filter(col("split") < corpusPct).select("vec_id", "embedding"),
+        numPlanes).localCheckpoint(),
+      emb.filter(col("split") >= corpusPct)
+        .select(col("vec_id"), col("embedding"),
+          graft.functions.VectorOps.dot(col("embedding"), col("embedding"))
+            .as("norm"),
+          Similarity.signSketch(col("embedding"), 0).as("qs0"),
+          Similarity.signSketch(col("embedding"), 1).as("qs1"))
+        .localCheckpoint())
     val cos = graft.functions.VectorOps.dot(col("embedding"), col("iemb")) /
       (sqrt(col("norm")) * sqrt(col("inorm")))
     // BOTH truth sets (loose + semantic threshold) in ONE brute-force

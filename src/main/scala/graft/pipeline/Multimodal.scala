@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Typed per-media metadata produced by the decoder. */
 case class MediaMeta(doc_id: Long, n_bytes: Long, width: Int, height: Int,
@@ -39,20 +39,16 @@ object Multimodal {
     * Size is bounded by the media payloads themselves (the same thing
     * a media table on disk costs).
     */
-  private val payloadsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def payloads(s: SparkSession, dir: String): DataFrame =
-    payloadsMemo.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir, _ => {
-        import s.implicits._
-        Tables.documents(s, dir)
-          .select(col("doc_id"))
-          .as[Long]
-          .mapPartitions(it => it.map(id => (id, MediaGen.pngPayload(id))))
-          .toDF("doc_id", "payload")
-          .localCheckpoint(true)
-      })
+    Memo(s, ("Multimodal.payloads", dir)) {
+      import s.implicits._
+      Tables.documents(s, dir)
+        .select(col("doc_id"))
+        .as[Long]
+        .mapPartitions(it => it.map(id => (id, MediaGen.pngPayload(id))))
+        .toDF("doc_id", "payload")
+        .localCheckpoint(true)
+    }
 
   /** Binary payload → per-partition batched decode → typed metadata. */
   def decode(s: SparkSession, dir: String,
@@ -192,20 +188,16 @@ object Multimodal {
     * the executors, materialized once per (session, dir) like the image
     * payloads.
     */
-  private val audioMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def audioPayloads(s: SparkSession, dir: String): DataFrame =
-    audioMemo.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir, _ => {
-        import s.implicits._
-        Tables.documents(s, dir)
-          .select(col("doc_id"))
-          .as[Long]
-          .mapPartitions(it => it.map(id => (id, MediaGen.wavPayload(id))))
-          .toDF("doc_id", "payload")
-          .localCheckpoint(true)
-      })
+    Memo(s, ("Multimodal.audioPayloads", dir)) {
+      import s.implicits._
+      Tables.documents(s, dir)
+        .select(col("doc_id"))
+        .as[Long]
+        .mapPartitions(it => it.map(id => (id, MediaGen.wavPayload(id))))
+        .toDF("doc_id", "payload")
+        .localCheckpoint(true)
+    }
 
   /** Container metadata from the REAL javax.sound decode — the
     * oracle-checkable audio projection (mm_decode_dims's twin): sample

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Distributed PCA over the embedding corpus — the dimensionality-
   * reduction preprocessing real ANN deployments run before product
@@ -88,66 +88,62 @@ object Pca {
   }
 
   /** The trained model: (eigenvalue, loadings) per component, leading
-    * first — memoized per corpus like every trained artifact.
+    * first — memoized per (session, corpus) like every trained artifact.
     */
-  private val modelStore =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[(Double, IndexedSeq[Double])]]()
-
   def trainComponents(s: SparkSession, dir: String,
                       k: Int = PcaK): IndexedSeq[(Double, IndexedSeq[Double])] =
-    modelStore.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir + "|" + k, _ => {
-        // collect the 2080-row long form into the dense symmetric matrix
-        val c = Array.ofDim[Double](Dim, Dim)
-        covariance(s, dir).collect().foreach { r =>
-          val (j, kk, v) = (r.getInt(0), r.getInt(1), r.getDouble(2))
-          c(j)(kk) = v; c(kk)(j) = v
-        }
-        // cyclic Jacobi: rotate away each off-diagonal (p,q) in a fixed
-        // order for a fixed number of sweeps — fully deterministic
-        val vm = Array.tabulate(Dim, Dim)((i, j) => if (i == j) 1.0 else 0.0)
-        (0 until JacobiSweeps).foreach { _ =>
-          (0 until Dim - 1).foreach { p =>
-            (p + 1 until Dim).foreach { q =>
-              val apq = c(p)(q)
-              if (math.abs(apq) > 1e-300) {
-                val theta = (c(q)(q) - c(p)(p)) / (2.0 * apq)
-                val t =
-                  if (theta >= 0) 1.0 / (theta + math.sqrt(theta * theta + 1.0))
-                  else -1.0 / (-theta + math.sqrt(theta * theta + 1.0))
-                val co = 1.0 / math.sqrt(t * t + 1.0)
-                val si = t * co
-                (0 until Dim).foreach { i =>
-                  val aip = c(i)(p); val aiq = c(i)(q)
-                  c(i)(p) = co * aip - si * aiq
-                  c(i)(q) = si * aip + co * aiq
-                }
-                (0 until Dim).foreach { j =>
-                  val apj = c(p)(j); val aqj = c(q)(j)
-                  c(p)(j) = co * apj - si * aqj
-                  c(q)(j) = si * apj + co * aqj
-                }
-                (0 until Dim).foreach { i =>
-                  val vip = vm(i)(p); val viq = vm(i)(q)
-                  vm(i)(p) = co * vip - si * viq
-                  vm(i)(q) = si * vip + co * viq
-                }
+    Memo(s, ("Pca.trainComponents", dir, k)) {
+      // collect the 2080-row long form into the dense symmetric matrix
+      val c = Array.ofDim[Double](Dim, Dim)
+      covariance(s, dir).collect().foreach { r =>
+        val (j, kk, v) = (r.getInt(0), r.getInt(1), r.getDouble(2))
+        c(j)(kk) = v; c(kk)(j) = v
+      }
+      // cyclic Jacobi: rotate away each off-diagonal (p,q) in a fixed
+      // order for a fixed number of sweeps — fully deterministic
+      val vm = Array.tabulate(Dim, Dim)((i, j) => if (i == j) 1.0 else 0.0)
+      (0 until JacobiSweeps).foreach { _ =>
+        (0 until Dim - 1).foreach { p =>
+          (p + 1 until Dim).foreach { q =>
+            val apq = c(p)(q)
+            if (math.abs(apq) > 1e-300) {
+              val theta = (c(q)(q) - c(p)(p)) / (2.0 * apq)
+              val t =
+                if (theta >= 0) 1.0 / (theta + math.sqrt(theta * theta + 1.0))
+                else -1.0 / (-theta + math.sqrt(theta * theta + 1.0))
+              val co = 1.0 / math.sqrt(t * t + 1.0)
+              val si = t * co
+              (0 until Dim).foreach { i =>
+                val aip = c(i)(p); val aiq = c(i)(q)
+                c(i)(p) = co * aip - si * aiq
+                c(i)(q) = si * aip + co * aiq
+              }
+              (0 until Dim).foreach { j =>
+                val apj = c(p)(j); val aqj = c(q)(j)
+                c(p)(j) = co * apj - si * aqj
+                c(q)(j) = si * apj + co * aqj
+              }
+              (0 until Dim).foreach { i =>
+                val vip = vm(i)(p); val viq = vm(i)(q)
+                vm(i)(p) = co * vip - si * viq
+                vm(i)(q) = si * vip + co * viq
               }
             }
           }
         }
-        val ordered = (0 until Dim)
-          .map(idx => (c(idx)(idx), idx))
-          .sortBy { case (l, idx) => (-l, idx) }
-          .take(k)
-        ordered.map { case (lambda, idx) =>
-          var v = Array.tabulate(Dim)(i => vm(i)(idx))
-          // orientation: largest-|loading| positive, ties lowest index
-          val piv = (0 until Dim).maxBy(i => (math.abs(v(i)), -i))
-          if (v(piv) < 0) v = v.map(-_)
-          (lambda, v.toIndexedSeq)
-        }.toIndexedSeq
-      })
+      }
+      val ordered = (0 until Dim)
+        .map(idx => (c(idx)(idx), idx))
+        .sortBy { case (l, idx) => (-l, idx) }
+        .take(k)
+      ordered.map { case (lambda, idx) =>
+        var v = Array.tabulate(Dim)(i => vm(i)(idx))
+        // orientation: largest-|loading| positive, ties lowest index
+        val piv = (0 until Dim).maxBy(i => (math.abs(v(i)), -i))
+        if (v(piv) < 0) v = v.map(-_)
+        (lambda, v.toIndexedSeq)
+      }.toIndexedSeq
+    }
 
   /** emb_pca: the model as rows (comp, j, loading, eigenvalue) —
     * driver-sized (k·d rows), rows-only (eigensolving has no SQL

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Keyword retrieval over the documents table: Okapi BM25 (Robertson &
   * Zaragoza 2009) — the lexical-search leg a data-curation stack needs
@@ -420,17 +420,12 @@ object Retrieval {
     // result-page-sized collects: <= pool rel rows + pool^2/2 sim rows.
     // The two collect jobs are independent — run them concurrently
     // (optimization r18, guide §2.6) instead of back to back.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val relF = Future(
-      pool.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val simF = Future(sims.collect().flatMap { r =>
-      val (a, b, sq) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      Seq((a, b) -> sq, (b, a) -> sq)
-    }.toMap)
-    val rel = Await.result(relF, Duration.Inf)
-    val simMap = Await.result(simF, Duration.Inf)
+    val (rel, simMap) = Par.both(s)(
+      pool.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      sims.collect().flatMap { r =>
+        val (a, b, sq) = (r.getLong(0), r.getLong(1), r.getLong(2))
+        Seq((a, b) -> sq, (b, a) -> sq)
+      }.toMap)
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
     var cands = rel.keySet
     var rnk = 1

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Par, Tables}
 
 /** Similarity search over the embeddings table (Array[Float], dim=64).
   *
@@ -347,27 +347,17 @@ object Similarity {
     withD.select(col("vec_id"), col("embedding"), col("norm"), cell.as("cell"))
   }
 
-  /** IVF cell assignment: nearest centroid by exact L2, ties → lower k. */
   /** Memoized cell-assignment frame — the IVF INDEX itself (vec_id →
     * cell, with norms), built once per (session, corpus, cell count)
     * and served to every leg that probes it (ivf, ivfSq8, residual
     * encode, recall records): the write-once serving posture a real
     * IVF deployment has, and measured at sf0.1 it stops the recall
-    * records from re-deriving the assignment once per leg. Keyed like
-    * truthStore/Dedup.dirKey (session identity included — a
-    * checkpointed frame dies with its SparkContext).
+    * records from re-deriving the assignment once per leg.
     */
-  private val cellStore =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def clearCellStore(): Unit = cellStore.clear()
-
   private def cells(s: SparkSession, dir: String,
                     numCells: Int = NumCells): DataFrame =
-    cellStore.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir + "|" + numCells,
-      _ => assignTo(withNorm(s, dir), formulaCentroids(numCells))
-        .localCheckpoint())
+    Memo(s, ("Similarity.cells", dir, numCells))(
+      assignTo(withNorm(s, dir), formulaCentroids(numCells)).localCheckpoint())
 
   /** Formula-centroid cell assignment over ANY (vec_id, embedding)
     * frame — the stateless kernel the STREAMING index maintainer
@@ -1132,11 +1122,6 @@ object Similarity {
   /** Code count of the 8-bit scalar quantizer: codes 0..255. */
   val Sq8Levels = 255
 
-  private val sq8Memo = new java.util.concurrent.ConcurrentHashMap[
-    String, (IndexedSeq[Double], IndexedSeq[Double])]()
-
-  private[graft] def clearSq8Memo(): Unit = sq8Memo.clear()
-
   /** SQ8 training pass: per-dimension [min, max] of the corpus — ONE
     * embarrassingly parallel scan into a Dim-keyed partial agg (64
     * groups), then a 64-row collect. min/max are EXACT (no float-sum
@@ -1147,22 +1132,21 @@ object Similarity {
     * (128 doubles), trained once and broadcast.
     */
   private def sq8Stats(s: SparkSession, dir: String): (IndexedSeq[Double], IndexedSeq[Double]) =
-    sq8Memo.computeIfAbsent(
-      System.identityHashCode(s).toHexString + "|" + dir, _ => {
-        val rows = Tables.embeddings(s, dir)
-          .select(posexplode(col("embedding")))
-          .toDF("j", "x")
-          .groupBy("j")
-          .agg(min(col("x").cast("double")).as("mn"),
-            max(col("x").cast("double")).as("mx"))
-          .collect()
-        val mn = Array.fill(Dim)(0.0)
-        val mx = Array.fill(Dim)(0.0)
-        rows.foreach { r =>
-          val j = r.getInt(0); mn(j) = r.getDouble(1); mx(j) = r.getDouble(2)
-        }
-        (mn.toIndexedSeq, mx.toIndexedSeq)
-      })
+    Memo(s, ("Similarity.sq8Stats", dir)) {
+      val rows = Tables.embeddings(s, dir)
+        .select(posexplode(col("embedding")))
+        .toDF("j", "x")
+        .groupBy("j")
+        .agg(min(col("x").cast("double")).as("mn"),
+          max(col("x").cast("double")).as("mx"))
+        .collect()
+      val mn = Array.fill(Dim)(0.0)
+      val mx = Array.fill(Dim)(0.0)
+      rows.foreach { r =>
+        val j = r.getInt(0); mn(j) = r.getDouble(1); mx(j) = r.getDouble(2)
+      }
+      (mn.toIndexedSeq, mx.toIndexedSeq)
+    }
 
   /** Dequantized SQ8 vector as a column: per dim, code =
     * clamp(⌊(x−mn)/(mx−mn)·255⌋), recon = mn + (code+0.5)·(mx−mn)/255
@@ -1287,26 +1271,16 @@ object Similarity {
       ("ann_ivfpq_res_trained", false,
         () => ivfPqResidualTrainedPairs(s, dir, NumCells, 4, PqCodesTrained, 3))))
 
-  /** Exact ground-truth store for the recall records, keyed
-    * (corpus dir, k) — the brute-force top-k is a deterministic
-    * artifact of the corpus, shared by every recall entry over it
-    * (the collapsed-contents / trained-centroid store pattern). The
-    * standalone ann_bruteforce entry does NOT use it: that entry
-    * measures the exact scan itself.
+  /** Recall records over `legs`, scored against the exact ground
+    * truth. The truth is memoized per (session, corpus dir, k) — the
+    * brute-force top-k is a deterministic artifact of the corpus,
+    * shared by every recall entry over it (the collapsed-contents /
+    * trained-centroid store pattern). The standalone ann_bruteforce
+    * entry does NOT use it: that entry measures the exact scan itself.
     */
-  private val truthStore =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), DataFrame]()
-
   private def recallOf(s: SparkSession, dir: String, k: Int,
                        legs: Seq[(String, Boolean, () => DataFrame)]): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // key includes the session identity (Dedup.dirKey discipline): a
-    // checkpointed frame is bound to its SparkContext, so a restarted
-    // session must rebuild, not be served a dead frame
-    val truth = truthStore.computeIfAbsent(
-      (System.identityHashCode(s).toHexString + "|" + dir, k), _ =>
+    val truth = Memo(s, ("Similarity.recallTruth", dir, k))(
       bruteForce(s, dir).filter(col("rnk") <= k)
         .select("qid", "vec_id").localCheckpoint())
     val tr = truth.groupBy("qid").agg(count(lit(1)).as("n_truth"))
@@ -1315,7 +1289,8 @@ object Similarity {
     // Dataset call re-runs the analyzer on the growing plan — build
     // them on concurrent driver threads (optimization r18, guide §2.6:
     // the sequential construction alone measured ~3 s of the record)
-    val built = legs.map { case (n, cos, f) => (n, cos, Future(f())) }
+    val built = legs.zip(Par.all(s)(legs.map(_._3)))
+      .map { case ((n, cos, _), df) => (n, cos, df) }
     // The legs' top-k ranking fuses into TWO shared windows over
     // (method, qid) — one per ordering kind (cosine desc, approx-dist
     // asc) — instead of one window exchange per leg, and ONE tagged
@@ -1327,9 +1302,8 @@ object Similarity {
     def ranked(cos: Boolean): Option[DataFrame] = {
       val subset = built.filter(_._2 == cos)
       if (subset.isEmpty) return None
-      val tagged = subset.map { case (n, _, fut) =>
-        Await.result(fut, Duration.Inf)
-          .select(lit(n).as("method"), col("qid"), col("vec_id"),
+      val tagged = subset.map { case (n, _, df) =>
+        df.select(lit(n).as("method"), col("qid"), col("vec_id"),
             (if (cos) col("cosine") else col("adist")).as("score")) }
         .reduce(_ unionAll _)
       val w = org.apache.spark.sql.expressions.Window

@@ -389,7 +389,7 @@ object TextAnalysis {
     val wCtx = org.apache.spark.sql.expressions.Window.partitionBy("ctx")
     var active = base
       .select(col("doc_id"), concat(col("ws"),
-        array(concat(lit(" #"), col("doc_id")))).as("wsx"))
+        array(concat(lit("\u0000#"), col("doc_id")))).as("wsx"))
       .select(col("doc_id"), col("wsx"),
         posexplode(col("wsx")).as(Seq("p", "tok")))
       .select(col("doc_id"), col("p"), concat_ws(" ",

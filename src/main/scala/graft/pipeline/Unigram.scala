@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** IN-ENGINE UNIGRAM-LM tokenizer TRAINING — the SentencePiece unigram
   * model (Kudo 2018: seed a large piece inventory, EM-estimate piece
@@ -71,20 +71,17 @@ object Unigram {
       .select(explode(expr("filter(split(text, ' '), w -> w <> '')")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
 
-  /** Trained model store keyed by corpus dir — train once, serve
+  /** The final (piece, cnt) model, count-descending (piece asc ties).
+    * Memoized per (session, corpus dir) — train once, serve
     * unigram_train / unigram_tokens from the one model.
     */
-  private val modelStore =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
-  /** The final (piece, cnt) model, count-descending (piece asc ties). */
   def learnedPieces(s: SparkSession, dir: String): Seq[(String, Long)] =
-    modelStore.computeIfAbsent(dir, _ => {
+    Memo(s, ("Unigram.learnedPieces", dir)) {
       val head = vocab(s, dir).take(Bpe.DriverVocabCap + 1)
       val words = head.map(r => (r.getString(0), r.getLong(1)))
       if (head.length <= Bpe.DriverVocabCap) emLoop(words, distributed = None)
       else emLoop(Array.empty, distributed = Some((s, dir)))
-    })
+    }
 
   /** Raw substring counts: every substring of length 1..
     * [[MaxPieceLen]], each occurrence weighted by the word's corpus

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** IN-ENGINE WordPiece tokenizer TRAINING — the third trained-tokenizer
   * family after BPE (pair-count argmax) and unigram-LM (Viterbi-EM).
@@ -48,17 +48,14 @@ object Wordpiece {
 
   final case class Merge(m: Long, x: String, y: String, cnt: Long, score: Long)
 
-  private val mergeStore =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Merge]]()
-
   def learnedMerges(s: SparkSession, dir: String,
                     merges: Int = Merges): Seq[Merge] =
-    mergeStore.computeIfAbsent((dir, merges), _ => {
+    Memo(s, ("Wordpiece.learnedMerges", dir, merges)) {
       val head = Bpe.vocab(s, dir).select("w", "freq").take(DriverVocabCap + 1)
       if (head.length <= DriverVocabCap)
         driverLoop(head.map(r => (r.getString(0), r.getLong(1))), merges)
       else trainLoop(s, dir, merges)
-    })
+    }
 
   /** Exact-BigInt driver loop (vocabulary under the cap). */
   private[graft] def driverLoop(words: Array[(String, Long)],

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import SparkFixture.{sf, spark}
 
@@ -64,5 +68,78 @@ class CancellationSpec extends AnyFunSuite {
     assert(secs < 90.0, s"cancellation must be prompt, took $secs s")
     // the session is not poisoned: a normal query still runs
     assert(Tables.events(spark, sf).limit(5).count() === 5L)
+  }
+
+  /** Cancelling a query reaches every job it starts, including the
+    * jobs its entry runs on concurrent driver threads. The group is
+    * cancelled BEFORE the call (cancelJobGroupAndFutureJobs), so every
+    * job submitted under it dies at submission — no timing involved:
+    * a job that starts at all ran under some other group. The call is
+    * made in a fresh session, so its memo builds happen inside the
+    * cancelled call; re-running the entry in that same session proves
+    * no cancelled build was kept.
+    */
+  private def cancelReachesEveryJob(prepare: SparkSession => Unit,
+                                    entry: SparkSession => DataFrame): Unit = {
+    val sc = spark.sparkContext
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def uniq(name: String) = s"graft-cancel-$name-${java.util.UUID.randomUUID}"
+    // a never-cancelled run in a session of its own
+    val expected = rows(entry(spark.newSession()))
+    val s1 = spark.newSession()
+    prepare(s1)
+    val group = uniq("entry")
+    val marker = uniq("marker")
+    val started = new ConcurrentHashMap[Int, String]()
+    val succeeded = ConcurrentHashMap.newKeySet[Int]()
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    @volatile var markerDone = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>")
+        if (g == marker) markerJobs.add(e.jobId) else started.put(e.jobId, g)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone = true
+        else if (e.jobResult == JobSucceeded) succeeded.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.cancelJobGroupAndFutureJobs(group)
+      sc.setJobGroup(group, "cancelled entry", interruptOnCancel = true)
+      val thrown =
+        try { entry(s1).collect(); None }
+        catch { case e: Throwable => Some(e) }
+        finally sc.clearJobGroup()
+      // the listener bus is asynchronous but ordered: once a marker
+      // job's end arrives, every event of the call has been delivered
+      sc.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!markerDone && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerDone, "listener bus never drained")
+      import scala.jdk.CollectionConverters._
+      val foreign = started.asScala.filter(_._2 != group)
+      assert(foreign.isEmpty, s"jobs started outside the cancelled group: $foreign")
+      assert(thrown.isDefined, "the caller must observe the cancellation")
+      assert(succeeded.isEmpty, s"jobs of the cancelled call succeeded: $succeeded")
+    } finally sc.removeSparkListener(listener)
+    sc.setJobGroup(uniq("rerun"), "rerun")
+    try assert(rows(entry(s1)) === expected) finally sc.clearJobGroup()
+  }
+
+  test("cancel reaches every job of admission_recall (nested Par)") {
+    cancelReachesEveryJob(_ => (),
+      s => graft.pipeline.Dedup.admissionRecall(s, sf))
+  }
+
+  test("cancel reaches every job of ann_recall (Par-built legs)") {
+    // the two recall records share the exact ground truth: after
+    // ann_recall_trained the cancelled call starts from a warm truth
+    // and cold index memos, so its first jobs are the legs' own
+    cancelReachesEveryJob(
+      s => graft.pipeline.Similarity.recallTrained(s, sf).collect(),
+      s => graft.pipeline.Similarity.recallAtK(s, sf))
   }
 }

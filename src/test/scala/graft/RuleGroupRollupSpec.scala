@@ -65,11 +65,11 @@ class RuleGroupRollupSpec extends AnyFunSuite {
     */
   private def scanLocations(s: org.apache.spark.sql.SparkSession,
                             rule: String): Set[String] =
-    RuleGroup.lastScanPaths.get(System.identityHashCode(s))(rule)
+    RuleGroup.lastScanPaths(s).get()(rule)
 
   private def allScanLocations(
       s: org.apache.spark.sql.SparkSession): Set[String] =
-    RuleGroup.lastScanPaths.get(System.identityHashCode(s))
+    RuleGroup.lastScanPaths(s).get()
       .values.reduce(_ ++ _)
 
   test("every servable verb: rollup-served group bit-equal to the raw group") {

@@ -1,0 +1,41 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the main sources against mechanisms that were removed:
+  * global-pool Futures (a pooled thread keeps the job group of the
+  * query that created it — driver-side concurrency goes through
+  * [[Par]]), identity-hash memo keys (a dead session's hash can be
+  * reused — memos go through [[Memo]]), and NUL bytes (they make grep
+  * treat a source as binary; write `\u0000` instead).
+  */
+class SourceHygieneSpec extends AnyFunSuite {
+
+  private val sources: Seq[Path] = {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("main sources are found") {
+    assert(sources.exists(_.endsWith("graft/Exec.scala")), s"scanned: $sources")
+  }
+
+  for ((banned, why) <- Seq(
+         "ExecutionContext.Implicits.global" -> "run driver-side work through graft.Par",
+         "System.identityHashCode" -> "key memos through graft.Memo")) {
+    test(s"no main source uses $banned") {
+      val hits = sources.filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(banned))
+      assert(hits.isEmpty, s"$why: $hits")
+    }
+  }
+
+  test("no main source contains a NUL byte") {
+    val hits = sources.filter(p => Files.readAllBytes(p).contains(0.toByte))
+    assert(hits.isEmpty, s"write NUL as the \\u0000 escape: $hits")
+  }
+}
