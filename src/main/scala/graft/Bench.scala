@@ -10,11 +10,12 @@ import org.apache.spark.sql.SparkSession
   * Trustworthiness (the round-2 lesson: n=1 swung 17% on untouched
   * code):
   *  - each query runs `SPARK_GRAFT_BENCH_REPS` times (default 3) and
-  *    reports the MEDIAN and the MIN, after one untimed global warmup;
-  *  - the warmup PRE-BUILDS every write-once artifact (chunk store,
-  *    bucketed table, trained IVF centroids) so a cold `target/` never
-  *    lands a store build inside a timed rep (BENCH_r05's false >2x
-  *    flags were exactly this plus box contention);
+  *    reports the MEDIAN and the MIN, after one untimed pass over the
+  *    same surface;
+  *  - that pass builds every write-once artifact and memo, so a cold
+  *    store root never lands a store build inside a timed rep
+  *    (BENCH_r05's false >2x flags were exactly this plus box
+  *    contention);
   *  - a throwing query emits value -1.0 and lands in the `failed` list
   *    instead of a tiny wall-clock that reads like a speedup;
   *  - if BASELINE.md carries locked per-query numbers (a
@@ -63,7 +64,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "/root/repo/BASELINE.md")
+    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE.md")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -99,55 +100,22 @@ object Bench {
       spark.stop()
       sys.exit(2)
     }
-    // Untimed warmup: JVM/codegen/file-index startup otherwise lands on
-    // whichever query happens to run first.
-    SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // Pre-build every write-once artifact untimed: on a cold target/ the
-    // chunk store, bucketed table, trained IVF centroids, and the shared
-    // collapsed-contents dedup store otherwise build inside the first
-    // timed rep of whichever query touches them.
-    Seq("q_chunk_meta", "q_bucketed_join", "ann_ivf_trained",
-        "ann_pq_trained", "ann_ivfpq_res_trained", "ann_recall_trained",
-        "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_embedding",
-        "mm_decode", "q_zorder_scan", "q_downsample", "doc_inverted",
-        "dedup_semantic_trained", "bpe_train",
-        // round-12 completeness (VERDICT r11 #6): the memoized graph
-        // edge list, the bigram LM scored frame, and the knn-graph /
-        // recall truth stores otherwise build inside the first timed rep
-        "q_triangle_count", "doc_lm_bigram", "emb_knn_graph",
-        "ann_recall",
-        // round-12 stores: the shredded-events store and the versioned
-        // dedup content index also build on first touch
-        "q_props_write_shred", "dedup_index_maintain",
-        // round-13: the stepped rollup serving probes the store's
-        // _edge_count boundary marker — a pre-marker store would
-        // backfill it (one raw scan) inside the first timed rep
-        "q_promql_rollup_stepped",
-        // round-14: the 1h chain level — pre-built so every
-        // hour-aligned rollup-serving entry picks it deterministically
-        // across reps (the picker is existence-probed)
-        "q_downsample_1h",
-        // round-17: the stream-maintained demo store — pre-built so
-        // the alphabetically-first demoStore consumer (now the live
-        // rule group) doesn't pay the streaming build in a timed rep
-        "q_promql_stepped_fresh",
-        // round-18: the compaction entry's fragmented INPUT state is a
-        // write-once fixture (SortedWriter.fragWritten) — pre-build it
-        // so the one fragment write never lands in a timed rep
-        "q_compaction").foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () } // surfaces in the timed run
-      }
+    // SPARK_GRAFT_BENCH_ONLY: regex over query names restricting the
+    // run — for locking a baseline number on a new entry without a
+    // full-surface run. A full run leaves it unset; a partial record is
+    // visibly partial (its `queries` map names exactly what ran).
+    val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ".*")
+    val timedQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
+      SparkEntry.queries.toSeq.filter(_._1.matches(only)).sortBy(_._1)
+    // Untimed warmup: one pass over the timed surface, so JVM / codegen /
+    // file-index startup and every artifact and memo an entry builds
+    // land before rep 1 by construction.
+    timedQueries.foreach { case (_, fn) =>
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () } // surfaces in the timed run
     }
 
     val failed = scala.collection.mutable.Buffer.empty[String]
-    // SPARK_GRAFT_BENCH_ONLY: regex over query names restricting the
-    // TIMED loop (warmup/pre-build above stay global) — for locking a
-    // baseline number on a new entry without a full-surface run. The
-    // driver never sets it; a partial record is visibly partial (its
-    // `queries` map names exactly what ran).
-    val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", ".*")
     // REP-MAJOR timed loop (round-12 fix; VERDICT r11 "next round" #1).
     // The old loop was query-major: 3 reps back-to-back per query, in
     // Map hash order. A host slow window then sweeps a contiguous block
@@ -156,8 +124,6 @@ object Bench {
     // 10 on bit-identical binaries. Rep-major runs the FULL sorted
     // surface once per rep: a slow window hits different queries in
     // different reps, and the per-query min recovers the quiet number.
-    val timedQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      SparkEntry.queries.toSeq.filter(_._1.matches(only)).sortBy(_._1)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     for (_ <- 1 to reps; (name, fn) <- timedQueries) {
       val t0 = System.nanoTime()
@@ -197,8 +163,7 @@ object Bench {
       .map { case (k, (_, mn)) => "\"" + k + "\":" + num(mn) }.mkString("{", ",", "}")
     val vsFull = ratios.toSeq.sortBy(-_._2)
       .map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "/root/repo/BENCH_DETAIL.json")
+    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     val detail =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","runs":$reps,
          |"cpus":$cpus,"sf":"$sfDir","n_queries":${results.size},

@@ -5,7 +5,7 @@ import graft.operators.{Relational, Scan, TimeSeries}
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.SortedWriter
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Entry-point contract — see SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

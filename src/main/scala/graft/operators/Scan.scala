@@ -279,7 +279,7 @@ object Scan {
     * points at: at 100 TB you don't re-parse JSON per query, you shred
     * the hot key to a REAL column once at ingest and filters on it push
     * down like any native column. The store materializes events with
-    * `k` extracted (write-once, `_SUCCESS` freshness, sorted by k so
+    * `k` extracted (a write-once graft.Artifact, sorted by k so
     * row-group stats prune the range filter); the query then filters
     * `k >= 90` WITH a PushedFilter — the thing the read-time JSON parse
     * can never give (PropsShredSpec asserts both halves of that
@@ -287,9 +287,7 @@ object Scan {
     * JSON, so the hash also proves the shred wrote faithful values.
     */
   def propsWriteShred(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${graft.sources.ChunkStore.storeRoot(s)}/shredded_" +
-      graft.sources.ChunkStore.pathTag(dir)
-    if (!new java.io.File(out, "_SUCCESS").isFile) {
+    val out = graft.Artifact(s, "shredded", s"$dir/events.parquet") { tmp =>
       Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("value"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -297,7 +295,7 @@ object Scan {
           graft.sources.ChunkStore.targetPartitions(s, s"$dir/events.parquet"),
           col("k"))
         .sortWithinPartitions("k")
-        .write.mode("overwrite").parquet(out)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(out)
       .filter(col("k") >= 90L)

@@ -479,7 +479,7 @@ object Dedup {
     * the FIRST-INGESTED contract, which is the production rule: an
     * index maps content to the copy that entered the corpus first, not
     * to a global min over time). Both versions are write-once
-    * (`_SUCCESS` freshness, the ChunkStore contract), so maintenance
+    * artifacts keyed on the documents fingerprint, so maintenance
     * is idempotent and each ingest's write cost is O(new contents),
     * never O(index): at 100 TB the v2 append is delta-sized while the
     * served index stays immutable behind it. Output: the v2 index with
@@ -488,26 +488,22 @@ object Dedup {
   def indexMaintain(s: SparkSession, dir: String,
                     corpusPct: Int = 80): DataFrame = {
     require(corpusPct > 0 && corpusPct < 100, "corpusPct must split both ways")
-    val root = graft.sources.ChunkStore.storeRoot(s)
-    val tag = graft.sources.ChunkStore.pathTag(dir)
-    // the split percentage is part of the store's identity (the
-    // DownsampleStore-encodes-ResolutionSec convention): a different
-    // corpusPct must never silently serve the stale split's index
-    val v1 = s"$root/dedupidx_${tag}_p$corpusPct/v1"
-    val v2 = s"$root/dedupidx_${tag}_p$corpusPct/v2"
     def b = Tables.documents(s, dir).select(
       col("doc_id"), md5(col("text")).as("chash"),
       splitBucket(col("doc_id")).as("bucket"))
-    if (!new java.io.File(v1, "_SUCCESS").isFile)
+    // corpusPct keys both versions: a different split must never
+    // silently serve the stale split's index
+    val src = s"$dir/documents.parquet"
+    val v1 = graft.Artifact(s, "dedupidx_v1", src, corpusPct) { out =>
       b.filter(col("bucket") < corpusPct)
         .groupBy("chash").agg(min("doc_id").as("keep_id"))
-        .write.mode("overwrite").parquet(v1)
-    if (!new java.io.File(v2, "_SUCCESS").isFile) {
-      val served = s.read.parquet(v1)
+        .write.mode("overwrite").parquet(out)
+    }
+    val v2 = graft.Artifact(s, "dedupidx_v2", src, corpusPct) { out =>
       b.filter(col("bucket") >= corpusPct)
         .groupBy("chash").agg(min("doc_id").as("keep_id"))
-        .join(served.select("chash"), Seq("chash"), "left_anti")
-        .write.mode("overwrite").parquet(v2)
+        .join(s.read.parquet(v1).select("chash"), Seq("chash"), "left_anti")
+        .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(v1).withColumn("since_version", lit(1))
       .unionAll(s.read.parquet(v2).withColumn("since_version", lit(2)))

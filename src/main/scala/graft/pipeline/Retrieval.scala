@@ -190,12 +190,6 @@ object Retrieval {
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"))
 
-  private def indexPath(s: SparkSession, dir: String): String =
-    s"${graft.sources.ChunkStore.storeRoot(s)}/inverted_" +
-      graft.sources.ChunkStore.pathTag(dir)
-
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Write-once inverted-index store, range-partitioned and sorted BY
     * TERM: a term-equality query prunes to the row groups whose
     * (min_term, max_term) range covers it — the posting-list seek of a
@@ -206,17 +200,13 @@ object Retrieval {
     * stream.
     */
   private def ensureWritten(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(indexPath(s, dir), { out =>
-      val success = new java.io.File(out, "_SUCCESS")
-      if (!success.isFile) {
-        postings(s, dir)
-          .repartitionByRange(graft.sources.ChunkStore.targetPartitions(
-            s, s"$dir/documents.parquet"), col("term"))
-          .sortWithinPartitions("term", "doc_id")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-      }
-      out
-    })
+    graft.Artifact(s, "inverted", s"$dir/documents.parquet") { out =>
+      postings(s, dir)
+        .repartitionByRange(graft.sources.ChunkStore.targetPartitions(
+          s, s"$dir/documents.parquet"), col("term"))
+        .sortWithinPartitions("term", "doc_id")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+    }
 
   def indexTable(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensureWritten(s, dir))
@@ -262,13 +252,6 @@ object Retrieval {
     */
   val PhraseTerms: Seq[String] = Seq("part", "filter", "scan")
 
-  private def posIndexPath(s: SparkSession, dir: String): String =
-    s"${graft.sources.ChunkStore.storeRoot(s)}/posidx_" +
-      graft.sources.ChunkStore.pathTag(dir)
-
-  private val posWritten =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Write-once POSITIONAL posting store — (term, doc_id, pos), the
     * with-positions layout every phrase-capable search index keeps
     * (Lucene's proximity postings). Same posture as the tf index:
@@ -277,20 +260,16 @@ object Retrieval {
     * posexplode projection, no shuffle keyed on the token stream.
     */
   private def ensurePosWritten(s: SparkSession, dir: String): String =
-    posWritten.computeIfAbsent(posIndexPath(s, dir), { out =>
-      val success = new java.io.File(out, "_SUCCESS")
-      if (!success.isFile) {
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            posexplode(expr("filter(split(text, ' '), w -> w <> '')"))
-              .as(Seq("pos", "term")))
-          .repartitionByRange(graft.sources.ChunkStore.targetPartitions(
-            s, s"$dir/documents.parquet"), col("term"))
-          .sortWithinPartitions("term", "doc_id", "pos")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-      }
-      out
-    })
+    graft.Artifact(s, "posidx", s"$dir/documents.parquet") { out =>
+      Tables.documents(s, dir)
+        .select(col("doc_id"),
+          posexplode(expr("filter(split(text, ' '), w -> w <> '')"))
+            .as(Seq("pos", "term")))
+        .repartitionByRange(graft.sources.ChunkStore.targetPartitions(
+          s, s"$dir/documents.parquet"), col("term"))
+        .sortWithinPartitions("term", "doc_id", "pos")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+    }
 
   def posIndexTable(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensurePosWritten(s, dir))

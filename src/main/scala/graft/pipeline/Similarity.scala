@@ -449,42 +449,41 @@ object Similarity {
     cents
   }
 
-  /** Centroid-table path keyed by (store root, dataset, k, iters) — a
-    * trained index is an artifact of its training inputs.
+  /** A trained store over `dir`'s embeddings, keyed by every training
+    * input. The clustered derived corpus reads the same file, so its
+    * tag is a key parameter too.
     */
-  private def centroidPath(s: SparkSession, dir: String, k: Int, iters: Int): String = {
-    val root = graft.sources.ChunkStore.storeRoot(s)
-    s"$root/ivf_centroids_${graft.sources.ChunkStore.pathTag(dir)}_k${k}_i$iters"
-  }
+  private def trainedStore(s: SparkSession, tag: String, dir: String,
+                           params: Any*)(build: String => Unit): String =
+    graft.Artifact(s, tag,
+      s"${dir.stripSuffix(Tables.ClusteredTag)}/embeddings.parquet",
+      (dir.endsWith(Tables.ClusteredTag) +: params): _*)(build)
 
-  private val trainedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[IndexedSeq[Double]]]()
-
-  private[graft] def clearTrainedMemo(): Unit = trainedMemo.clear()
-
-  /** Write-once trained index (the ChunkStore pattern): the first call
-    * runs k-means and persists the (cell, centroid) table as parquet;
-    * every later call — including a fresh JVM — reads the store and
-    * plans NO training jobs. Parquet stores the doubles bit-exactly, so
-    * a read-back index is identical to the freshly trained one.
+  /** Write-once (cell, centroid) table: the first call runs `train` and
+    * persists it as parquet; every later call — a new session or JVM
+    * included — reads the store and plans NO training jobs. Parquet
+    * stores the doubles bit-exactly, so a read-back index is identical
+    * to the freshly trained one. Decoded once per session.
     */
-  def trainedCentroids(s: SparkSession, dir: String,
-                       k: Int = NumCells, iters: Int = 3): IndexedSeq[IndexedSeq[Double]] =
-    trainedMemo.computeIfAbsent(centroidPath(s, dir, k, iters), { path =>
-      val success = new java.io.File(path, "_SUCCESS")
-      if (!success.isFile) {
-        val cents = trainCentroids(s, dir, k, iters)
-        import s.implicits._
-        cents.zipWithIndex.map { case (c, i) => (i, c.toArray) }
-          .toDF("cell", "centroid")
-          .coalesce(1) // k·dim doubles — one tiny file
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
+  private def centroidStore(s: SparkSession, dir: String, params: Any*)(
+      train: => IndexedSeq[IndexedSeq[Double]]): IndexedSeq[IndexedSeq[Double]] = {
+    val path = trainedStore(s, "ivf_centroids", dir, params: _*) { out =>
+      centroidFrame(s, train)
+        .coalesce(1) // k·dim doubles — one tiny file
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+    }
+    Memo(s, ("Similarity.centroids", path)) {
       s.read.parquet(path).collect()
         .sortBy(_.getAs[Int]("cell"))
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq)
         .toIndexedSeq
-    })
+    }
+  }
+
+  /** Write-once trained index: k-means centroids over the corpus. */
+  def trainedCentroids(s: SparkSession, dir: String,
+                       k: Int = NumCells, iters: Int = 3): IndexedSeq[IndexedSeq[Double]] =
+    centroidStore(s, dir, k, iters)(trainCentroids(s, dir, k, iters))
 
   /** Trained centroids as a broadcastable (cell, centroid) frame. */
   private[graft] def centroidFrame(s: SparkSession,
@@ -521,55 +520,42 @@ object Similarity {
     */
   def trainedCentroidsSampled(s: SparkSession, dir: String, k: Int,
                               iters: Int = 3,
-                              samplePct: Int = 20): IndexedSeq[IndexedSeq[Double]] = {
-    val path = centroidPath(s, dir, k, iters) + s"_s$samplePct"
-    trainedMemo.computeIfAbsent(path, { _ =>
-      val success = new java.io.File(path, "_SUCCESS")
-      if (!success.isFile) {
-        val all = withNorm(s, dir)
-        val sampled = all.filter(
-          (conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % 100L) < samplePct)
-        // a sample that cannot seed k cells falls back to the corpus
-        val emb = (if (sampled.limit(k).count() < k) all else sampled)
-          .localCheckpoint() // the sample is re-scanned every iteration
-        var cents: IndexedSeq[IndexedSeq[Double]] =
-          emb.orderBy("vec_id").limit(k).collect()
-            .map(_.getAs[scala.collection.Seq[Float]]("embedding")
-              .map(_.toDouble).toIndexedSeq).toIndexedSeq
-        require(cents.length == k, s"need >= $k vectors to seed $k cells")
-        (1 to iters).foreach { _ =>
-          val sums = assignJoin(emb, centroidFrame(s, cents))
-            .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-            .groupBy("cell", "pos")
-            .agg(sum(col("v").cast("decimal(30,12)")).cast("double").as("s"),
-              count(lit(1)).as("n"))
-            .collect() // k x dim rows — centroid-table-sized, not data-sized
-          val byCell = sums.groupBy(_.getAs[Int]("cell"))
-          cents = IndexedSeq.tabulate(k) { c =>
-            byCell.get(c) match {
-              case Some(rs) =>
-                val arr = Array.fill(Dim)(0.0)
-                rs.foreach { r =>
-                  arr(r.getAs[Int]("pos")) = r.getAs[Double]("s") / r.getAs[Long]("n")
-                }
-                arr.toIndexedSeq
-              case None => cents(c) // empty cell keeps its centroid
-            }
+                              samplePct: Int = 20): IndexedSeq[IndexedSeq[Double]] =
+    centroidStore(s, dir, k, iters, s"s$samplePct") {
+      val all = withNorm(s, dir)
+      val sampled = all.filter(
+        (conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
+          .cast("long") % 100L) < samplePct)
+      // a sample that cannot seed k cells falls back to the corpus
+      val emb = (if (sampled.limit(k).count() < k) all else sampled)
+        .localCheckpoint() // the sample is re-scanned every iteration
+      var cents: IndexedSeq[IndexedSeq[Double]] =
+        emb.orderBy("vec_id").limit(k).collect()
+          .map(_.getAs[scala.collection.Seq[Float]]("embedding")
+            .map(_.toDouble).toIndexedSeq).toIndexedSeq
+      require(cents.length == k, s"need >= $k vectors to seed $k cells")
+      (1 to iters).foreach { _ =>
+        val sums = assignJoin(emb, centroidFrame(s, cents))
+          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
+          .groupBy("cell", "pos")
+          .agg(sum(col("v").cast("decimal(30,12)")).cast("double").as("s"),
+            count(lit(1)).as("n"))
+          .collect() // k x dim rows — centroid-table-sized, not data-sized
+        val byCell = sums.groupBy(_.getAs[Int]("cell"))
+        cents = IndexedSeq.tabulate(k) { c =>
+          byCell.get(c) match {
+            case Some(rs) =>
+              val arr = Array.fill(Dim)(0.0)
+              rs.foreach { r =>
+                arr(r.getAs[Int]("pos")) = r.getAs[Double]("s") / r.getAs[Long]("n")
+              }
+              arr.toIndexedSeq
+            case None => cents(c) // empty cell keeps its centroid
           }
         }
-        import s.implicits._
-        cents.zipWithIndex.map { case (c, i) => (i, c.toArray) }
-          .toDF("cell", "centroid")
-          .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
-      s.read.parquet(path).collect()
-        .sortBy(_.getAs[Int]("cell"))
-        .map(_.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq)
-        .toIndexedSeq
-    })
-  }
+      cents
+    }
 
   /** Nearest-TRAINED-cell assignment of the full corpus, with dist —
     * the SemDeDup clustering pass.
@@ -885,51 +871,36 @@ object Similarity {
     cbs
   }
 
-  private def pqCodebookPath(s: SparkSession, dir: String, iters: Int): String = {
-    val root = graft.sources.ChunkStore.storeRoot(s)
-    s"$root/pq_codebooks_${graft.sources.ChunkStore.pathTag(dir)}_k${PqCodes}_i$iters"
-  }
-
-  private val trainedPqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]()
-
-  private[graft] def clearTrainedPqMemo(): Unit = trainedPqMemo.clear()
-
   /** Write-once codebook store shared by the raw and residual trained
-    * paths: first call runs `train` and persists (m, code, centroid) as
-    * parquet; later calls — fresh JVMs included — read the store and
-    * plan no training jobs.
+    * paths: the first call runs `train` and persists (m, code,
+    * centroid) as parquet; later calls — new sessions and JVMs included
+    * — read the store and plan no training jobs.
     */
-  private def pqCodebookStore(s: SparkSession, path: String, codes: Int,
-      train: () => IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
-    trainedPqMemo.computeIfAbsent(path, { _ =>
-      val success = new java.io.File(path, "_SUCCESS")
-      if (!success.isFile) {
-        val cbs = train()
-        import s.implicits._
-        (for { m <- cbs.indices; kc <- cbs(m).indices }
-          yield (m, kc, cbs(m)(kc).toArray))
-          .toDF("m", "code", "centroid")
-          .coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
+  private def pqCodebookStore(s: SparkSession, tag: String, dir: String,
+                              codes: Int, params: Any*)(
+      train: => IndexedSeq[IndexedSeq[IndexedSeq[Double]]]): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
+    val path = trainedStore(s, tag, dir, (codes +: params): _*) { out =>
+      val cbs = train
+      import s.implicits._
+      (for { m <- cbs.indices; kc <- cbs(m).indices }
+        yield (m, kc, cbs(m)(kc).toArray))
+        .toDF("m", "code", "centroid")
+        .coalesce(1)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
+    }
+    Memo(s, ("Similarity.pqCodebooks", path)) {
       val rows = s.read.parquet(path).collect()
         .map(r => (r.getAs[Int]("m"), r.getAs[Int]("code")) ->
           r.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq).toMap
       IndexedSeq.tabulate(PqSub)(m => IndexedSeq.tabulate(codes)(kc => rows((m, kc))))
-    })
+    }
+  }
 
-  /** Write-once trained PQ codebooks (the trainedCentroids pattern). */
+  /** Write-once trained PQ codebooks. */
   def trainedPqCodebooks(s: SparkSession, dir: String,
                          iters: Int = 3): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
-    pqCodebookStore(s, pqCodebookPath(s, dir, iters), PqCodes,
-      () => trainPqCodebooks(s, dir, iters))
-
-  private def resCodebookPath(s: SparkSession, dir: String,
-                              numCells: Int, codes: Int, iters: Int): String = {
-    val root = graft.sources.ChunkStore.storeRoot(s)
-    s"$root/pq_res_codebooks_${graft.sources.ChunkStore.pathTag(dir)}_c${numCells}_k${codes}_i$iters"
-  }
+    pqCodebookStore(s, "pq_codebooks", dir, PqCodes, iters)(
+      trainPqCodebooks(s, dir, iters))
 
   /** PQ codebooks trained on RESIDUALS (x − coarse centroid of x's own
     * cell) — what FAISS's IndexIVFPQ trains by default. Write-once like
@@ -944,12 +915,12 @@ object Similarity {
                                  numCells: Int = NumCells,
                                  codes: Int = PqCodesTrained,
                                  iters: Int = 3): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
-    pqCodebookStore(s, resCodebookPath(s, dir, numCells, codes, iters), codes, { () =>
+    pqCodebookStore(s, "pq_res_codebooks", dir, codes, numCells, iters) {
       val res = withResidualCol(s,
         cells(s, dir, numCells).select("vec_id", "embedding", "cell"), numCells)
         .select(col("vec_id"), col("residual").as("embedding"))
       trainPqCodebooksOn(res, iters, codes)
-    })
+    }
 
   /** PQ-ADC search over TRAINED codebooks (rows-only — k-means is not
     * SQL-expressible; the spec asserts determinism, write-once reuse,

@@ -82,7 +82,7 @@ object ResultCache {
   private def keyOf(dir: String, expr: String,
                     spec: Promql.EvalSpec): (String, String) = {
     val src = Paths.get(dir, "events.parquet")
-    val fp = ChunkStore.sourceFingerprint(src, "events.parquet")
+    val fp = graft.Artifact.fingerprint(src)
     val phase = Math.floorMod(spec.startSec, spec.stepSec)
     (sha(s"$expr|${spec.stepSec}|${spec.lookbackSec}|$phase|$dir", 12),
       sha(fp, 6))

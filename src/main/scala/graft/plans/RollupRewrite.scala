@@ -32,9 +32,9 @@ import graft.sources.DownsampleStore
   *      without changing sibling query plans);
   *   2. the scan is a single-root parquet relation over
   *      `<dir>/events.parquet` and the MV for that exact dir is
-  *      MATERIALIZED (`_SUCCESS` present) — the staleness gate: no
-  *      store, no rewrite (immutable inputs make freshness = existence,
-  *      ChunkStore's write-once contract);
+  *      COMMITTED — the staleness gate: no store, no rewrite (the
+  *      store path carries the events fingerprint, so freshness =
+  *      existence, graft.Artifact's contract);
   *   3. the aggregate is EXACTLY the shape the rollup answers
   *      losslessly: grouping on (hour-truncated ts, event_type), the
   *      one measure the exact-decimal SUM of value — hour windows
@@ -416,7 +416,7 @@ case class RollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     * names one (freshness = its `_watermark` horizon, returned so the
     * substitute can cut at complete steps), else the batch MV for the
     * query's events dir (freshness = existence, the write-once
-    * `_SUCCESS` contract) at the COARSEST chain level the step width
+    * Artifact contract) at the COARSEST chain level the step width
     * aligns to (round 14): an hour-multiple step reads the 1 h store —
     * 12× fewer rows — falling to 300 s when the hour level is absent.
     * Tumbling windows are closed-left like the buckets, so level
@@ -485,7 +485,7 @@ case class RollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       // coarsest-first chain pick: 1 d (round 15), then 1 h, then 300 s
       def levelPick(res: Long, p: String): Option[(Seq[Band], Option[Long])] =
         if (stepW % res != 0) None
-        else if (new File(p, "_SUCCESS").isFile)
+        else if (new File(p).isDirectory)
           Some((Seq((Seq(p), res, None, None)), Option.empty[Long]))
         else None
       levelPick(DownsampleStore.DayResolutionSec,
@@ -494,7 +494,7 @@ case class RollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
           DownsampleStore.storePath1h(session, dir)))
         .orElse {
           val store = DownsampleStore.storePath(session, dir)
-          if (new File(store, "_SUCCESS").isFile)
+          if (new File(store).isDirectory)
             Some((Seq((Seq(store), DownsampleStore.ResolutionSec,
               None, None)), None))
           else None

@@ -78,7 +78,7 @@ object SteppedRollup {
   /** Coarsest-first BATCH store level pick — 1 d (round 15), then 1 h,
     * then 300 s (Thanos's auto-downsampling resolution pick): a level
     * serves only when the whole grid aligns to it (`alignedTo`), the
-    * store is materialized (`_SUCCESS`), and it is boundary-clean; a
+    * store is committed (its directory exists), and it is boundary-clean; a
     * finer level is never refused because a coarser one is absent.
     * Shared between the stepped front-end and the rule-group compiler
     * (round 17) so both make the identical access-path choice.
@@ -87,7 +87,7 @@ object SteppedRollup {
                  alignedTo: Long => Boolean): Option[(String, Long)] = {
     def pick(res: Long, p: String, clean: => Boolean): Option[(String, Long)] =
       if (!alignedTo(res)) None
-      else if (new java.io.File(p, "_SUCCESS").isFile && clean) Some((p, res))
+      else if (new java.io.File(p).isDirectory && clean) Some((p, res))
       else None
     pick(DownsampleStore.DayResolutionSec,
         DownsampleStore.storePath1d(s, dir),
@@ -108,7 +108,7 @@ object SteppedRollup {
     *   - selector pins a fixed @ time, carries a non-aligned offset, or
     *     references derived (payload) labels the store doesn't carry;
     *   - a matcher touches anything but the store's own label columns;
-    *   - store not materialized (`_SUCCESS`) or not boundary-clean.
+    *   - store not committed or not boundary-clean.
     */
   /** @param rawTail re-evaluates the SAME query raw over a narrowed
     *   spec — the hybrid fresh-tail hook (round 15; VERDICT r14 #3):

@@ -21,10 +21,8 @@ import graft.Tables
   * compactor's job in the reference); decode is a flatMap — both scale
   * linearly and never touch the driver.
   *
-  * The chunk table is written ONCE per (dataset, format) and read many
-  * times — `ensureWritten` checks the parquet _SUCCESS marker and a
-  * per-JVM memo instead of rebuilding per query (a store, not a cache
-  * miss per lookup).
+  * The chunk table is written ONCE per (source content, format) and
+  * read many times — a [[graft.Artifact]], not a rebuild per query.
   */
 object ChunkStore {
 
@@ -92,58 +90,21 @@ object ChunkStore {
       .write.mode(SaveMode.Overwrite).parquet(out)
 
   /** Store root, from `spark.graft.store.root` (a library must not
-    * hardcode its output location; the default keeps the harness
-    * layout). Shared by every graft store (SortedWriter, the trained
-    * IVF index).
+    * hardcode its output location; the default is relative to the
+    * working directory). Shared by every graft store.
     */
   def storeRoot(s: SparkSession): String =
-    s.conf.get("spark.graft.store.root", "/root/repo/target/tmp")
+    s.conf.get("spark.graft.store.root", "target/tmp")
 
   /** A dataset dir as a filesystem-safe path fragment. */
   def pathTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
-  /** Content fingerprint of a staged corpus source — ONE definition
-    * site for every stream store that stages a corpus into an inbox
-    * (streaming/CurationStream, RollupMaintainStream.demoStore): a
-    * spark-written DIRECTORY fingerprints by its part names + sizes
-    * (the names embed UUIDs, so a regenerated corpus always differs);
-    * a single plain FILE carries no UUID, so size alone can collide
-    * across regenerations — fold last-modified time in (ADVICE r14).
-    */
-  def sourceFingerprint(src: java.nio.file.Path, singleName: String): String = {
-    val entries =
-      if (java.nio.file.Files.isDirectory(src)) {
-        val st = java.nio.file.Files.list(src)
-        try st.filter(_.getFileName.toString.endsWith(".parquet"))
-          .map[String](p => s"${p.getFileName}:${java.nio.file.Files.size(p)}")
-          .sorted().toArray.mkString("\n")
-        finally st.close()
-      } else {
-        val mt = java.nio.file.Files.getLastModifiedTime(src).toMillis
-        s"$singleName:${java.nio.file.Files.size(src)}:$mt"
-      }
-    java.util.UUID.nameUUIDFromBytes(
-      entries.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
-  }
-
-  private def chunkPath(s: SparkSession, dir: String) =
-    s"${storeRoot(s)}/chunks_${FormatTag}_${pathTag(dir)}"
-
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write-once-read-many: the first query against a dataset builds the
-    * chunk table; every later query reads the existing parquet. The
-    * testdata is immutable, so the parquet _SUCCESS marker is a valid
-    * freshness proof across JVMs; the format tag in the path invalidates
-    * tables written by an older codec. The memo keys on the full output
-    * path, so a store-root change is a different store.
+  /** The chunk table of `dir`'s events, built on first access; the
+    * format tag in the key invalidates tables written by an older codec.
     */
   private def ensureWritten(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(chunkPath(s, dir), { out =>
-      val success = new java.io.File(out, "_SUCCESS")
-      if (!success.isFile) writeChunks(s, dir, out)
-      out
-    })
+    graft.Artifact(s, s"chunks_$FormatTag", s"$dir/events.parquet")(
+      writeChunks(s, dir, _))
 
   /** The full chunk table (written on first access) — the raw
     * (labels, mint, maxt, n_samples, chunk) frame, for readers that do

@@ -140,60 +140,40 @@ object DownsampleStore {
           .cast("decimal(30,6)")).as("inc_dec"))
   }
 
-  // `c1` = counter-partials schema revision (round 13): the store is
-  // write-once, so a schema extension is a new path — pre-c1 stores on
-  // disk are orphaned, never half-read
-  private def path(s: SparkSession, dir: String): String =
-    s"${ChunkStore.storeRoot(s)}/downsample_${ResolutionSec}s_c1_${ChunkStore.pathTag(dir)}"
+  // `c1` = counter-partials schema revision (round 13): a schema
+  // extension is a new tag, so pre-c1 stores on disk are orphaned,
+  // never half-read. Every level keys on the events fingerprint.
+  private def tag(resolutionSec: Long): String = s"downsample_${resolutionSec}s_c1"
 
-  private def path1h(s: SparkSession, dir: String): String =
-    s"${ChunkStore.storeRoot(s)}/downsample_${HourResolutionSec}s_c1_${ChunkStore.pathTag(dir)}"
+  private def path(s: SparkSession, dir: String, resolutionSec: Long): String =
+    graft.Artifact.path(s, tag(resolutionSec), s"$dir/events.parquet")
 
   /** Public 1 h-store location — the existence probe the resolution
     * pickers (SteppedRollup.serve, RollupRewrite.resolveStore) use.
     */
-  def storePath1h(s: SparkSession, dir: String): String = path1h(s, dir)
-
-  private def path1d(s: SparkSession, dir: String): String =
-    s"${ChunkStore.storeRoot(s)}/downsample_${DayResolutionSec}s_c1_${ChunkStore.pathTag(dir)}"
+  def storePath1h(s: SparkSession, dir: String): String =
+    path(s, dir, HourResolutionSec)
 
   /** Public 1 d-store location (picker existence probe, round 15). */
-  def storePath1d(s: SparkSession, dir: String): String = path1d(s, dir)
+  def storePath1d(s: SparkSession, dir: String): String =
+    path(s, dir, DayResolutionSec)
 
-  /** The 1 h rollup frame, RE-AGGREGATED FROM the 300 s store (the
-    * chain build — at 100 TB the hourly level reads rollup rows, never
-    * raw samples):
+  /** One chain fold: a finer-level rollup frame re-aggregated into
+    * `R`-second parent buckets (300 s → 1 h → 1 d; at 100 TB each level
+    * reads rollup rows, never raw samples):
     *  - n_samples / sum_dec: partial sums merge exactly (DECIMAL);
     *  - min/max: order statistics compose;
     *  - first/last: the extreme NON-EMPTY child bucket's stored
     *    endpoint (one store row per (series, child bucket), so the
     *    arg-pick never ties);
-    *  - inc_dec: Σ child inc_dec (within-300 s pairs) + Σ boundary
-    *    growths between consecutive non-empty child buckets inside the
-    *    hour, reconstructed from the stored endpoints and quantized
-    *    per pair exactly like the evaluator's exactSum — together
-    *    exactly the hour's within-bucket reset-corrected pair sum.
-    * The lag window partitions by (series, HOUR), so the sort is
-    * hour-local (≤ 12 child rows per series per hour) and aligned with
-    * the groupBy keys — one shuffle, no hot-series pileup.
-    */
-  def rollup1h(s: SparkSession, dir: String): DataFrame =
-    rollupFrom(table(s, dir), HourResolutionSec)
-
-  /** The 1 d level, re-aggregated FROM the 1 h store — the third chain
-    * link (round 15): the same fold as 300 s → 1 h, one level up, so
-    * the within-day counter pair sum merges ≤ 24 hourly inc_dec
-    * partials + the hour-boundary endpoint growths. Year-wide
-    * dashboards read 288× fewer rows than the 300 s level.
-    */
-  def rollup1d(s: SparkSession, dir: String): DataFrame =
-    rollupFrom(table1h(s, dir), DayResolutionSec)
-
-  /** One chain fold: a finer-level rollup frame re-aggregated into
-    * `R`-second parent buckets. The lag window partitions by (series,
-    * parent bucket), so the sort is parent-local (≤ parent/child rows
-    * per series per parent) and aligned with the groupBy keys — one
-    * shuffle, no hot-series pileup.
+    *  - inc_dec: Σ child inc_dec + Σ boundary growths between
+    *    consecutive non-empty child buckets inside the parent,
+    *    reconstructed from the stored endpoints and quantized per pair
+    *    exactly like the evaluator's exactSum — together exactly the
+    *    parent's within-bucket reset-corrected pair sum.
+    * The lag window partitions by (series, parent bucket), so the sort
+    * is parent-local (≤ parent/child rows per series per parent) and
+    * aligned with the groupBy keys — one shuffle, no hot-series pileup.
     */
   private[graft] def rollupFrom(child: DataFrame, R: Long): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(30, 6)
@@ -226,84 +206,39 @@ object DownsampleStore {
       .withColumnRenamed("pbucket", "bucket")
   }
 
-  /** Write-once 1 h store (built on first access; builds the 300 s
-    * level first — the chain). Born with its own `_edge_count` marker:
-    * a sample on a 3600 s boundary is necessarily on a 300 s boundary
-    * (300 | 3600), so a clean 300 s store proves the 1 h level clean
-    * for free; only a dirty 300 s store pays a raw count at build time.
+  /** Write-once 1 h store, built from the committed 300 s level (the
+    * chain).
     */
-  // materialize the FINER level BEFORE entering this level's
-  // computeIfAbsent: ConcurrentHashMap forbids the mapping function
-  // from inserting into the same map (recursive update — livelock or
-  // IllegalStateException depending on hash bins), and frame() walks
-  // down the chain. With the child key already present, the nested
-  // computeIfAbsent inside frame() is a plain read.
-  private def ensureWritten1h(s: SparkSession, dir: String): String = {
-    ensureWritten(s, dir)
-    ensureWrittenLevel(s, dir, path1h(s, dir), () => rollup1h(s, dir),
-      path(s, dir), HourResolutionSec)
-  }
+  private def ensureWritten1h(s: SparkSession, dir: String): String =
+    ensureWrittenLevel(s, dir, HourResolutionSec, ensureWritten(s, dir))
 
-  private def ensureWritten1d(s: SparkSession, dir: String): String = {
-    ensureWritten1h(s, dir)
-    ensureWrittenLevel(s, dir, path1d(s, dir), () => rollup1d(s, dir),
-      path1h(s, dir), DayResolutionSec)
-  }
+  private def ensureWritten1d(s: SparkSession, dir: String): String =
+    ensureWrittenLevel(s, dir, DayResolutionSec, ensureWritten1h(s, dir))
 
-  /** Write-once build of one chain level. Born with its own
-    * `_edge_count` marker: a sample on an `R`-second boundary is
-    * necessarily on the FINER level's boundary (the finer resolution
-    * divides R), so a clean finer store proves this level clean for
-    * free; only a dirty finer store pays a raw count at build time.
+  /** Write-once build of one chain level from the committed finer level
+    * at `fine`. Born with its own `_edge_count` marker: a sample on an
+    * `R`-second boundary is necessarily on the FINER level's boundary
+    * (the finer resolution divides R), so a clean finer store proves
+    * this level clean for free; only a dirty finer store pays a raw
+    * count at build time.
     */
-  private def ensureWrittenLevel(s: SparkSession, dir: String, out: String,
-                                 frame: () => DataFrame, finePath: String,
-                                 resolutionSec: Long): String =
-    written.computeIfAbsent(out, { out =>
-      val success = new java.io.File(out, "_SUCCESS")
-      if (!success.isFile) {
-        frame()
-          .repartitionByRange(
-            ChunkStore.targetPartitions(s, path(s, dir)), col("bucket"))
-          .sortWithinPartitions("bucket", "event_type", "user_id")
-          .write.mode(SaveMode.Overwrite).parquet(out)
-        writeEdgeMarkerLevel(s, dir, out, finePath, resolutionSec)
-      } else if (!new java.io.File(out, "_edge_count").isFile) {
-        // crash repair, off the planner
-        writeEdgeMarkerLevel(s, dir, out, finePath, resolutionSec)
-      }
-      out
-    })
-
-  private def writeEdgeMarkerLevel(s: SparkSession, dir: String, out: String,
-                                   finePath: String,
-                                   resolutionSec: Long): Long = {
-    val fine = new java.io.File(finePath, "_edge_count")
-    val fineCnt =
-      if (fine.isFile)
-        new String(java.nio.file.Files.readAllBytes(fine.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      else -1L
-    val cnt =
-      if (fineCnt == 0L) 0L
-      else Tables.events(s, dir)
-        .filter(expr(s"unix_micros(ts) % ${resolutionSec * 1000000L} = 0"))
-        .count()
-    val tmp = java.io.File.createTempFile("edge", ".tmp", new java.io.File(out))
-    java.nio.file.Files.write(tmp.toPath,
-      cnt.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(out, "_edge_count").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    cnt
-  }
+  private def ensureWrittenLevel(s: SparkSession, dir: String,
+                                 resolutionSec: Long, fine: String): String =
+    graft.Artifact(s, tag(resolutionSec), s"$dir/events.parquet") { out =>
+      rollupFrom(s.read.parquet(fine), resolutionSec)
+        .repartitionByRange(
+          ChunkStore.targetPartitions(s, storePath(s, dir)), col("bucket"))
+        .sortWithinPartitions("bucket", "event_type", "user_id")
+        .write.mode(SaveMode.Overwrite).parquet(out)
+      writeEdgeCount(out,
+        if (edgeCount(fine) == 0L) 0L else rawEdgeCount(s, dir, resolutionSec))
+    }
 
   /** [[boundaryClean]] for the 1 h level (its own `_edge_count` marker,
     * same refuse-don't-compute posture).
     */
   def boundaryClean1h(s: SparkSession, dir: String): Boolean =
-    boundaryCleanAt(path1h(s, dir))
+    boundaryCleanAt(storePath1h(s, dir))
 
   /** The stored 1 h rollup (chain-built on first access). */
   def table1h(s: SparkSession, dir: String): DataFrame =
@@ -311,7 +246,7 @@ object DownsampleStore {
 
   /** [[boundaryClean]] for the 1 d level (round 15). */
   def boundaryClean1d(s: SparkSession, dir: String): Boolean =
-    boundaryCleanAt(path1d(s, dir))
+    boundaryCleanAt(storePath1d(s, dir))
 
   /** The stored 1 d rollup (chain-built on first access: 300 s → 1 h →
     * 1 d, each level reading only the one below — never raw samples).
@@ -321,59 +256,51 @@ object DownsampleStore {
 
   /** Public store location for a dataset dir — the existence probe the
     * optimizer's MV-rewrite rule (plans/RollupRewrite.scala) uses as
-    * its freshness gate (write-once store: materialized ⇔ fresh).
+    * its freshness gate (the path carries the source fingerprint:
+    * committed ⇔ fresh).
     */
-  def storePath(s: SparkSession, dir: String): String = path(s, dir)
+  def storePath(s: SparkSession, dir: String): String =
+    path(s, dir, ResolutionSec)
 
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Write-once store (same freshness contract as ChunkStore: immutable
-    * inputs, _SUCCESS as the marker). Range-partitioned on bucket,
-    * sorted by (bucket, event_type, user_id) so time-slice queries prune
-    * on row-group bucket stats.
+  /** Write-once 300 s store. Range-partitioned on bucket, sorted by
+    * (bucket, event_type, user_id) so time-slice queries prune on
+    * row-group bucket stats.
     */
   private def ensureWritten(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(path(s, dir), { out =>
-      val success = new java.io.File(out, "_SUCCESS")
-      if (!success.isFile) {
-        rollup(s, dir)
-          .repartitionByRange(
-            ChunkStore.targetPartitions(s, s"$dir/events.parquet"), col("bucket"))
-          .sortWithinPartitions("bucket", "event_type", "user_id")
-          .write.mode(SaveMode.Overwrite).parquet(out)
-        writeEdgeMarker(s, dir, out) // stores are born with their marker
-      } else if (!new java.io.File(out, "_edge_count").isFile) {
-        // a crash between the parquet commit and the marker move left
-        // the store marker-less: repair HERE, off the planning path —
-        // boundaryClean refuses marker-less stores instead of stalling
-        // the planner on a raw scan (ADVICE r13)
-        writeEdgeMarker(s, dir, out)
-      }
-      out
-    })
+    graft.Artifact(s, tag(ResolutionSec), s"$dir/events.parquet") { out =>
+      rollup(s, dir)
+        .repartitionByRange(
+          ChunkStore.targetPartitions(s, s"$dir/events.parquet"), col("bucket"))
+        .sortWithinPartitions("bucket", "event_type", "user_id")
+        .write.mode(SaveMode.Overwrite).parquet(out)
+      writeEdgeCount(out, rawEdgeCount(s, dir, ResolutionSec))
+    }
 
   /** Count of raw samples sitting EXACTLY on a bucket boundary, as a
     * store-side marker. Stepped PromQL windows are (t − W, t] — open at
     * the left — so a W-window is an exact union of buckets only when no
     * sample's µs timestamp is a multiple of the resolution (the one
     * point a bucket holds that its covering window excludes). The count
-    * is computed once per write-once store and published atomically;
-    * the stepped MV serving (plans/SteppedRollup.scala) refuses any
-    * store whose count is nonzero.
+    * is computed once per write-once store and committed with it; the
+    * stepped MV serving (plans/SteppedRollup.scala) refuses any store
+    * whose count is nonzero.
     */
-  private def writeEdgeMarker(s: SparkSession, dir: String,
-                              out: String): Long = {
-    val cnt = Tables.events(s, dir)
-      .filter(expr(s"unix_micros(ts) % ${ResolutionSec * 1000000L} = 0"))
+  private def rawEdgeCount(s: SparkSession, dir: String,
+                           resolutionSec: Long): Long =
+    Tables.events(s, dir)
+      .filter(expr(s"unix_micros(ts) % ${resolutionSec * 1000000L} = 0"))
       .count()
-    val tmp = java.io.File.createTempFile("edge", ".tmp", new java.io.File(out))
-    java.nio.file.Files.write(tmp.toPath,
+
+  private def writeEdgeCount(out: String, cnt: Long): Unit =
+    java.nio.file.Files.write(new java.io.File(out, "_edge_count").toPath,
       cnt.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(out, "_edge_count").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    cnt
+
+  /** The `_edge_count` marker of a store, -1 when there is none. */
+  private def edgeCount(out: String): Long = {
+    val marker = new java.io.File(out, "_edge_count")
+    if (!marker.isFile) -1L
+    else new String(java.nio.file.Files.readAllBytes(marker.toPath),
+      java.nio.charset.StandardCharsets.UTF_8).trim.toLong
   }
 
   private val edgeClean =
@@ -381,30 +308,24 @@ object DownsampleStore {
 
   /** True iff no raw sample sits exactly on a resolution boundary —
     * the store property that makes (t − W, t] windows exact unions of
-    * buckets. Reads the `_edge_count` marker ONLY: a marker-less store
-    * (a crash between the parquet commit and the marker move) refuses —
-    * boundaryClean runs inside query planning (SteppedRollup.serve),
-    * and backfilling the count there would stall the planner on a full
-    * raw scan (ADVICE r13). The repair happens off the planning path,
-    * in ensureWritten, so the missing-marker verdict is NOT cached.
+    * buckets. Reads the `_edge_count` marker ONLY: boundaryClean runs
+    * inside query planning (SteppedRollup.serve), so an absent store
+    * refuses instead of stalling the planner on a raw scan (ADVICE
+    * r13); the absent verdict is NOT cached.
     */
   def boundaryClean(s: SparkSession, dir: String): Boolean =
-    boundaryCleanAt(path(s, dir))
+    boundaryCleanAt(storePath(s, dir))
 
   /** One definition of the marker-read posture for every chain level:
-    * missing marker = refuse (repaired by the level's next build),
-    * verdict cached per store path.
+    * absent store = refuse, verdict cached per (fingerprinted) path.
     */
   private def boundaryCleanAt(out: String): Boolean =
     Option(edgeClean.get(out)).map(_.booleanValue()).getOrElse {
-      val marker = new java.io.File(out, "_edge_count")
-      if (!marker.isFile) false
+      val cnt = edgeCount(out)
+      if (cnt < 0L) false
       else {
-        val clean = new String(
-          java.nio.file.Files.readAllBytes(marker.toPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong == 0L
-        edgeClean.put(out, java.lang.Boolean.valueOf(clean))
-        clean
+        edgeClean.put(out, java.lang.Boolean.valueOf(cnt == 0L))
+        cnt == 0L
       }
     }
 

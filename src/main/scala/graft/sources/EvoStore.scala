@@ -27,27 +27,18 @@ import graft.Tables
   */
 object EvoStore {
 
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def path(s: SparkSession, dir: String): String =
-    s"${ChunkStore.storeRoot(s)}/evo_${ChunkStore.pathTag(dir)}"
-
+  /** Both generations, committed together as one artifact. */
   private def ensure(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(path(s, dir), { out =>
-      val done = new java.io.File(s"$out/g2", "_SUCCESS")
-      if (!done.isFile) {
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("value"),
-            col("event_type"))
-        ev.filter(col("user_id") % 2 === 0)
-          .select("event_id", "user_id", "value")
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/g1")
-        ev.filter(col("user_id") % 2 === 1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/g2")
-      }
-      out
-    })
+    graft.Artifact(s, "evo", s"$dir/events.parquet") { out =>
+      val ev = Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), col("value"),
+          col("event_type"))
+      ev.filter(col("user_id") % 2 === 0)
+        .select("event_id", "user_id", "value")
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/g1")
+      ev.filter(col("user_id") % 2 === 1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/g2")
+    }
 
   /** The merged read: old files' rows carry NULL event_type. */
   def read(s: SparkSession, dir: String): DataFrame =

@@ -84,8 +84,7 @@ object RecordedRules {
     // first rule's data would be wrong numbers, no error), and an
     // in-place regenerated dataset must re-record rather than serve
     // stale rows for the session's lifetime
-    val fp = ChunkStore.sourceFingerprint(
-      java.nio.file.Paths.get(dir, "events.parquet"), "events.parquet")
+    val fp = graft.Artifact.fingerprint(java.nio.file.Paths.get(dir, "events.parquet"))
     written.compute(p, (_, prev) => {
       if (prev != null)
         require(prev._1 == ruleKey,

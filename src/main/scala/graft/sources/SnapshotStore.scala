@@ -67,12 +67,6 @@ object SnapshotStore {
     case _        => MatchNone
   }
 
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def path(s: SparkSession, dir: String): String =
-    s"${ChunkStore.storeRoot(s)}/snap_${ChunkStore.pathTag(dir)}"
-
   private def manifestPath(root: String, v: Int): File =
     new File(s"$root/manifests", s"v$v.txt")
 
@@ -110,46 +104,46 @@ object SnapshotStore {
   private def groupType(group: String): String =
     group.substring(group.lastIndexOf('_') + 1)
 
+  /** All three versions, committed together as one artifact; each
+    * version's manifest is still published atomically inside it.
+    */
   private def ensure(s: SparkSession, dir: String): String =
-    written.computeIfAbsent(path(s, dir), { root =>
-      if (!manifestPath(root, 3).isFile) {
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("us"), col("value"))
-        val types = ev.select("event_type").distinct()
-          .collect().map(_.getString(0)).sorted // bounded by schema
-        // v1 INSERT: the even generation, one group per partition value
-        val v1 = types.map { t =>
-          val g = s"data/v1_$t"
-          ev.filter(col("event_id") % 2 === 0 && col("event_type") === t)
-            .write.mode(SaveMode.Overwrite).parquet(s"$root/$g")
-          g
-        }.toSeq
-        writeManifest(root, 1, v1)
-        // v2 APPEND: odd generation as new groups; v1 carried by ref
-        val v2 = v1 ++ types.map { t =>
-          val g = s"data/v2_$t"
-          ev.filter(col("event_id") % 2 === 1 && col("event_type") === t)
-            .write.mode(SaveMode.Overwrite).parquet(s"$root/$g")
-          g
-        }.toSeq
-        writeManifest(root, 2, v2)
-        // v3 DELETE: per-group decision from the partition value only
-        val v3 = v2.flatMap { g =>
-          matchFor(groupType(g)) match {
-            case MatchWhole => Seq.empty // metadata-only: drop, don't touch
-            case MatchPartial =>
-              val rw = g.replaceFirst("data/", "data/v3r_")
-              s.read.parquet(s"$root/$g").filter(!deletePred)
-                .write.mode(SaveMode.Overwrite).parquet(s"$root/$rw")
-              Seq(rw)
-            case MatchNone => Seq(g) // carried by reference
-          }
+    graft.Artifact(s, "snap", s"$dir/events.parquet") { root =>
+      val ev = Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          unix_micros(col("ts")).as("us"), col("value"))
+      val types = ev.select("event_type").distinct()
+        .collect().map(_.getString(0)).sorted // bounded by schema
+      // v1 INSERT: the even generation, one group per partition value
+      val v1 = types.map { t =>
+        val g = s"data/v1_$t"
+        ev.filter(col("event_id") % 2 === 0 && col("event_type") === t)
+          .write.mode(SaveMode.Overwrite).parquet(s"$root/$g")
+        g
+      }.toSeq
+      writeManifest(root, 1, v1)
+      // v2 APPEND: odd generation as new groups; v1 carried by ref
+      val v2 = v1 ++ types.map { t =>
+        val g = s"data/v2_$t"
+        ev.filter(col("event_id") % 2 === 1 && col("event_type") === t)
+          .write.mode(SaveMode.Overwrite).parquet(s"$root/$g")
+        g
+      }.toSeq
+      writeManifest(root, 2, v2)
+      // v3 DELETE: per-group decision from the partition value only
+      val v3 = v2.flatMap { g =>
+        matchFor(groupType(g)) match {
+          case MatchWhole => Seq.empty // metadata-only: drop, don't touch
+          case MatchPartial =>
+            val rw = g.replaceFirst("data/", "data/v3r_")
+            s.read.parquet(s"$root/$g").filter(!deletePred)
+              .write.mode(SaveMode.Overwrite).parquet(s"$root/$rw")
+            Seq(rw)
+          case MatchNone => Seq(g) // carried by reference
         }
-        writeManifest(root, 3, v3)
       }
-      root
-    })
+      writeManifest(root, 3, v3)
+    }
 
   /** Read the table AS OF version `v`: plan exactly the manifest's file
     * groups — nothing else is listed, opened, or decoded.

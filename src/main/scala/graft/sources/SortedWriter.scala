@@ -111,40 +111,32 @@ object SortedWriter {
     s.read.parquet(out).select("event_id", "user_id", "event_type", "value")
   }
 
-  /** Write-once guard for the fragmented INPUT state of
-    * [[compactionQuery]] (optimization r18): the tiny-files state is
-    * the compaction's input fixture, not part of the compaction being
+  /** The fragmented INPUT state of [[compactionQuery]], a write-once
+    * artifact (optimization r18): the tiny-files state is the
+    * compaction's input fixture, not part of the compaction being
     * measured — rewriting it identically on every invocation doubled
-    * the entry's cost. Keyed by (store path, source fingerprint) like
-    * the recorded-rules store, so a regenerated dataset re-fragments.
+    * the entry's cost.
     */
-  private val fragWritten =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def fragmented(s: SparkSession, dir: String): String =
+    graft.Artifact(s, "frag", s"$dir/events.parquet") { out =>
+      // many tiny files per date partition (streaming ingest output)
+      Tables.events(s, dir).drop("ts_ns")
+        .withColumn("date", to_date(col("ts")))
+        .repartition(16)
+        .write.mode(SaveMode.Overwrite).partitionBy("date").parquet(out)
+    }
 
-  /** Fragment events into many small files (simulating streaming ingest
-    * output), then compact: coalesce per date partition into sorted files.
+  /** Compact the fragmented state: coalesce per date partition into
+    * sorted files.
     */
   def compactionQuery(s: SparkSession, dir: String): DataFrame = {
-    val frag = s"${base(s)}/frag_${sfTag(dir)}"
+    val frag = fragmented(s, dir)
     val compacted = s"${base(s)}/compact_${sfTag(dir)}"
-    val ev = Tables.events(s, dir).drop("ts_ns")
-      .withColumn("date", to_date(col("ts")))
-    // 1. fragmented state: many tiny files per date partition —
-    //    write-once per (path, source fingerprint)
-    val fp = ChunkStore.sourceFingerprint(
-      java.nio.file.Paths.get(dir, "events.parquet"), "events.parquet")
-    fragWritten.compute(frag, (_, prev) => {
-      if (prev == null || prev != fp ||
-        !new java.io.File(frag, "_SUCCESS").isFile)
-        ev.repartition(16)
-          .write.mode(SaveMode.Overwrite).partitionBy("date").parquet(frag)
-      fp
-    })
-    // 2. compaction: size-scaled range partitions over (date, type, ts).
-    //    A hash repartition on `date` alone would mean ONE task and one
-    //    giant output file per date — a straggler on every hot date at
-    //    100×. Range partitioning keeps files sorted AND splits a hot
-    //    date across tasks; file count follows input bytes.
+    // size-scaled range partitions over (date, type, ts). A hash
+    // repartition on `date` alone would mean ONE task and one giant
+    // output file per date — a straggler on every hot date at 100×.
+    // Range partitioning keeps files sorted AND splits a hot date
+    // across tasks; file count follows input bytes.
     s.read.parquet(frag)
       .repartitionByRange(
         ChunkStore.targetPartitions(s, frag),

@@ -65,18 +65,6 @@ object ZOrderStore {
     }
   }
 
-  private def zPath(s: SparkSession, dir: String) =
-    s"${ChunkStore.storeRoot(s)}/zorder_${ChunkStore.pathTag(dir)}"
-
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def clearMemo(): Unit = written.clear()
-
-  /** Write-once z-ordered events store (the ChunkStore pattern). The
-    * dimension bounds come from one tiny aggregate (4 scalars — at
-    * cluster scale, file-footer stats); `numFiles <= 0` sizes
-    * partitions from input bytes.
-    */
   /** Z-order and write ANY events-shaped frame (columns incl. user_id
     * and a µs-long `us`): the core the store build and the
     * ingest-compaction pass share. `parts` <= 0 lets the caller size
@@ -99,20 +87,21 @@ object ZOrderStore {
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
+  /** Write-once z-ordered events store, keyed on `numFiles`. The
+    * dimension bounds come from one tiny aggregate (4 scalars — at
+    * cluster scale, file-footer stats); `numFiles <= 0` sizes
+    * partitions from input bytes.
+    */
   def ensureWritten(s: SparkSession, dir: String, numFiles: Int = 0): String =
-    written.computeIfAbsent(s"${zPath(s, dir)}#$numFiles", { _ =>
-      val path = if (numFiles <= 0) zPath(s, dir) else s"${zPath(s, dir)}_n$numFiles"
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val ev = Tables.events(s, dir).select(
-          col("event_id"), col("user_id"), col("event_type"), col("value"),
-          unix_micros(col("ts")).as("us"))
-        val parts =
-          if (numFiles > 0) numFiles
-          else ChunkStore.targetPartitions(s, s"$dir/events.parquet")
-        writeZOrdered(ev, path, parts)
-      }
-      path
-    })
+    graft.Artifact(s, "zorder", s"$dir/events.parquet", numFiles) { path =>
+      val ev = Tables.events(s, dir).select(
+        col("event_id"), col("user_id"), col("event_type"), col("value"),
+        unix_micros(col("ts")).as("us"))
+      val parts =
+        if (numFiles > 0) numFiles
+        else ChunkStore.targetPartitions(s, s"$dir/events.parquet")
+      writeZOrdered(ev, path, parts)
+    }
 
   /** Compaction pass over a STREAMING INGEST sink (sources/Ingest's
     * date-partitioned layout): re-cluster the accumulated small files

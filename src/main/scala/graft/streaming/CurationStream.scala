@@ -131,8 +131,7 @@ object CurationStream {
     // once; a mismatched re-stage wipes inbox + checkpoint + store and
     // rebuilds from scratch (determinism makes the rebuild exact).
     val srcPath = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val fp = graft.sources.ChunkStore.sourceFingerprint(
-      srcPath, "documents.parquet")
+    val fp = graft.Artifact.fingerprint(srcPath)
     val fpFile = new java.io.File(s"$root/curstream_$tag", "_source_fp")
     if (fpFile.isFile && new String(
         java.nio.file.Files.readAllBytes(fpFile.toPath),

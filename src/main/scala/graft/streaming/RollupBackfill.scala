@@ -205,7 +205,7 @@ object RollupBackfill {
     val store = s"$base/store"
     val cp = s"$base/cp"
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val fp = graft.sources.ChunkStore.sourceFingerprint(src, "events.parquet")
+    val fp = graft.Artifact.fingerprint(src)
     val fpFile = new File(base, "_source_fp")
     if (fpFile.isFile && new String(
         java.nio.file.Files.readAllBytes(fpFile.toPath),

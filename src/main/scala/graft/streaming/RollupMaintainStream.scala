@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
   * build; this job keeps a rollup store trailing the live stream by
   * only the watermark delay, and the MV rewrite
   * (plans/RollupRewrite.scala) serves opted-in queries from it with an
-  * EXPLICIT staleness bound in place of the write-once `_SUCCESS` gate.
+  * EXPLICIT staleness bound in place of the write-once existence gate.
   *
   * Mechanics: [[StreamAgg.downsampleStream]]'s aggregation — the same
   * (bucket × series) measures as the batch store, with the DECIMAL
@@ -558,8 +558,7 @@ object RollupMaintainStream {
     val store = s"$base/store"
     val cp = s"$base/cp"
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val fp =
-      graft.sources.ChunkStore.sourceFingerprint(src, "events.parquet")
+    val fp = graft.Artifact.fingerprint(src)
     val fpFile = new java.io.File(base, "_source_fp")
     if (fpFile.isFile && new String(
         java.nio.file.Files.readAllBytes(fpFile.toPath),

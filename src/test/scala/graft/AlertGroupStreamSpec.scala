@@ -61,7 +61,7 @@ class AlertGroupStreamSpec extends AnyFunSuite {
     .agg(max(col("value").cast("double")).as("value"))
 
   test("group emissions equal independent per-rule streams; recording rules emit batch-exact buckets") {
-    val base = "/root/repo/target/tmp/alertgroupstream"
+    val base = SparkFixture.tmp("alertgroupstream")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
 
     // the group: one stream over all three rules
@@ -132,7 +132,7 @@ class AlertGroupStreamSpec extends AnyFunSuite {
       AlertGroupStream.SRule("g_p90", "click|purchase", "quantile",
         43200L, Some(0.0), forSec = 86400L, keepSec = 43200L, q = 0.9),
       AlertGroupStream.SRule("g_var_rec", "purchase", "stdvar", W6, None))
-    val base = "/root/repo/target/tmp/alertgroupstream_dist"
+    val base = SparkFixture.tmp("alertgroupstream_dist")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val gin = s"$base/group_in"
     val gout = s"$base/group_out"; val gchk = s"$base/group_chk"
@@ -181,7 +181,7 @@ class AlertGroupStreamSpec extends AnyFunSuite {
   }
 
   test("runOnce persists recording rules through the recorded store; alerts alongside") {
-    val base = "/root/repo/target/tmp/alertgroupstream_store"
+    val base = SparkFixture.tmp("alertgroupstream_store")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val store = s"$base/store"
     evolve(in) { () =>

@@ -22,7 +22,7 @@ class AlertStreamSpec extends AnyFunSuite {
   private val Keep = W         // hysteresis bridges one missed eval
 
   test("streaming alert emissions equal the batch state machine, extension rows included") {
-    val base = "/root/repo/target/tmp/alertstream"
+    val base = SparkFixture.tmp("alertstream")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))
@@ -100,7 +100,7 @@ class AlertStreamSpec extends AnyFunSuite {
         300.0),
       ("max", "max by (event_type)(max_over_time({event_type=~\"click|purchase\"}[6h])) > 250",
         250.0))) {
-      val base = s"/root/repo/target/tmp/alertstream_$verb"
+      val base = SparkFixture.tmp(s"alertstream_$verb")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
       Files.createDirectories(Paths.get(in))
@@ -155,7 +155,7 @@ class AlertStreamSpec extends AnyFunSuite {
         "sum by (event_type)(rate({event_type=~\"click|purchase\"}[12h])) > 0"),
       ("increase",
         "sum by (event_type)(increase({event_type=~\"click|purchase\"}[12h])) > 0"))) {
-      val base = s"/root/repo/target/tmp/alertstream_$verb"
+      val base = SparkFixture.tmp(s"alertstream_$verb")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
       Files.createDirectories(Paths.get(in))
@@ -222,7 +222,7 @@ class AlertStreamSpec extends AnyFunSuite {
       ("quantile",
         "sum by (event_type)(quantile_over_time(0.9, {event_type=~\"click|purchase\"}[12h])) > 0",
         0.9))) {
-      val base = s"/root/repo/target/tmp/alertstream_$verb"
+      val base = SparkFixture.tmp(s"alertstream_$verb")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
       Files.createDirectories(Paths.get(in))
@@ -274,7 +274,7 @@ class AlertStreamSpec extends AnyFunSuite {
     // ADMITTED (above-watermark) sample for the still-open bucket
     // 17:00 — cursor initialization from the first arrival would drop
     // it and the 17:00 alert would never exist
-    val base = "/root/repo/target/tmp/alertstream_ooo"
+    val base = SparkFixture.tmp("alertstream_ooo")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))
@@ -322,7 +322,7 @@ class AlertStreamSpec extends AnyFunSuite {
   }
 
   test("keep_firing_for = 0 emits exactly the held-step alerts (no extension rows)") {
-    val base = "/root/repo/target/tmp/alertstream0"
+    val base = SparkFixture.tmp("alertstream0")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))

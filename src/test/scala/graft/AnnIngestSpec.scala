@@ -13,7 +13,7 @@ class AnnIngestSpec extends AnyFunSuite {
   private val sf = SparkFixture.sf
 
   test("stream-maintained postings equal the batch cell assignment") {
-    val base = "/root/repo/target/tmp/ann_ingest"
+    val base = SparkFixture.tmp("ann_ingest")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val out = s"$base/out"; val chk = s"$base/chk"
     Files.createDirectories(Paths.get(in))
@@ -50,7 +50,7 @@ class AnnIngestSpec extends AnyFunSuite {
   }
 
   test("stream-built store serves IVF search at batch recall") {
-    val base = "/root/repo/target/tmp/ann_ingest_search"
+    val base = SparkFixture.tmp("ann_ingest_search")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val out = s"$base/out"; val chk = s"$base/chk"
     Files.createDirectories(Paths.get(in))

@@ -20,7 +20,7 @@ import SparkFixture.{scanOutputRows, spark}
   */
 class BloomReadSpec extends AnyFunSuite {
 
-  private val out = "/root/repo/target/tmp/bloom_store"
+  private val out = SparkFixture.tmp("bloom_store")
 
   // fine-grained layout: ~32 KiB row groups, ≤100-row pages, so one
   // 10k-row table produces many row groups and many pages per group

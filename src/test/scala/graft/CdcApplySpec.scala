@@ -15,7 +15,7 @@ import SparkFixture.{sf, spark}
 class CdcApplySpec extends AnyFunSuite {
 
   private def root(tag: String): String = {
-    val r = s"/root/repo/target/tmp/cdcapply_$tag"
+    val r = SparkFixture.tmp(s"cdcapply_$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r))
     Files.createDirectories(Paths.get(s"$r/in"))
     r

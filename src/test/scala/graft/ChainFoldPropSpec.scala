@@ -50,7 +50,7 @@ class ChainFoldPropSpec extends AnyFunSuite {
     val D = DownsampleStore.DayResolutionSec
     val dec = "decimal(30,6)"
     for (seed <- Seq(7L, 41L, 1337L)) {
-      val root = s"/root/repo/target/tmp/chainprop_$seed"
+      val root = SparkFixture.tmp(s"chainprop_$seed")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       val dir = s"$root/data"
       genEvents(seed, 600).toDF("event_id", "us", "user_id", "event_type", "value")
@@ -103,7 +103,7 @@ class ChainFoldPropSpec extends AnyFunSuite {
     val H = DownsampleStore.HourResolutionSec
     for (seed <- Seq(11L, 83L, 2024L)) {
       val rnd = new scala.util.Random(seed)
-      val root = s"/root/repo/target/tmp/chainprop_inc_$seed"
+      val root = SparkFixture.tmp(s"chainprop_inc_$seed")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       val dir = s"$root/data"
       genEvents(seed, 600).toDF("event_id", "us", "user_id", "event_type", "value")

@@ -34,8 +34,8 @@ class ChunkStoreSpec extends AnyFunSuite {
   }
 
   test("chunk files are written in (mint, maxt, labels) sort order") {
-    ChunkStore.writeChunks(spark, sf, "/root/repo/target/tmp/test_chunks")
-    val files = new java.io.File("/root/repo/target/tmp/test_chunks").listFiles()
+    ChunkStore.writeChunks(spark, sf, SparkFixture.tmp("test_chunks"))
+    val files = new java.io.File(SparkFixture.tmp("test_chunks")).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getPath)
     assert(files.nonEmpty)
     files.foreach { f =>

@@ -128,7 +128,7 @@ class CurationSpec extends AnyFunSuite {
     // text land on BOTH sides of the hash split (split leakage) — the
     // content-level collapse must still reproduce the doc-level result
     // row for row
-    val base = "/root/repo/target/tmp/curation_dup"
+    val base = SparkFixture.tmp("curation_dup")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val docs = Tables.documents(spark, sf)
     (0 until 3).map(i => docs.withColumn("doc_id", col("doc_id") + lit(i * 1000000L)))

@@ -9,7 +9,7 @@ import SparkFixture.{sf, spark}
 class CurationStreamSpec extends AnyFunSuite {
 
   private def freshDirs(tag: String): (String, String, String) = {
-    val base = s"/root/repo/target/tmp/curstream_$tag"
+    val base = SparkFixture.tmp(s"curstream_$tag")
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     Files.createDirectories(Paths.get(in))

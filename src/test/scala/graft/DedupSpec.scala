@@ -295,10 +295,9 @@ class DedupSpec extends AnyFunSuite {
     val run1 = Dedup.semanticTrained(spark, dir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
         r.getString(4), r.getLong(5))).sortBy(_._1)
-    // write-once: a fresh memo must reproduce the run from the
-    // persisted centroid store bit-for-bit
-    graft.pipeline.Similarity.clearTrainedMemo()
-    val run2 = Dedup.semanticTrained(spark, dir).collect()
+    // write-once: a new session (no memo) must reproduce the run from
+    // the persisted centroid store bit-for-bit
+    val run2 = Dedup.semanticTrained(spark.newSession(), dir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
         r.getString(4), r.getLong(5))).sortBy(_._1)
     assert(run1.sameElements(run2), "trained run must be reproducible")

@@ -17,7 +17,7 @@ import SparkFixture.{sf, spark}
 class HeavyHitterStreamSpec extends AnyFunSuite {
 
   private def root(tag: String): String = {
-    val r = s"/root/repo/target/tmp/hhstream_$tag"
+    val r = SparkFixture.tmp(s"hhstream_$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r))
     Files.createDirectories(Paths.get(s"$r/in"))
     r

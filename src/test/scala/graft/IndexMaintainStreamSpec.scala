@@ -16,7 +16,7 @@ import SparkFixture.{sf, spark}
 class IndexMaintainStreamSpec extends AnyFunSuite {
 
   private def freshDirs(tag: String): (String, String, String) = {
-    val base = s"/root/repo/target/tmp/idxstream_$tag"
+    val base = SparkFixture.tmp(s"idxstream_$tag")
     val in = s"$base/in"; val store = s"$base/store"; val cp = s"$base/cp"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     Files.createDirectories(Paths.get(in))

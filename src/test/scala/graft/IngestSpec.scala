@@ -9,7 +9,7 @@ import SparkFixture.{sf, spark}
 class IngestSpec extends AnyFunSuite {
 
   private def freshDirs(tag: String): (String, String, String) = {
-    val base = s"/root/repo/target/tmp/ingest_$tag"
+    val base = SparkFixture.tmp(s"ingest_$tag")
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     Files.createDirectories(Paths.get(in))
@@ -52,7 +52,7 @@ class IngestSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts_ns").as("ts"), col("user_id"),
         col("event_type"), col("value"), lit("{}").as("props"))
     def stage(half: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = s"/root/repo/target/tmp/ingest_chunkconv/stage_$name"
+      val tmp = SparkFixture.tmp(s"ingest_chunkconv/stage_$name")
       half.coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head

@@ -51,7 +51,7 @@ class MmAdmissionSpec extends AnyFunSuite {
   }
 
   test("the streaming leg reproduces the batch verdicts doc-for-doc across a restart") {
-    val base = "/root/repo/target/tmp/mm_neardup_stream"
+    val base = SparkFixture.tmp("mm_neardup_stream")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"
     Files.createDirectories(Paths.get(in))

@@ -44,7 +44,7 @@ class ObjectStorePostureSpec extends AnyFunSuite {
     "fs.s3a.prefetch.block.size" -> "4M")
 
   private def store: String = {
-    val out = "/root/repo/target/tmp/test_posture_sorted"
+    val out = SparkFixture.tmp("test_posture_sorted")
     if (!new java.io.File(s"$out/_SUCCESS").isFile)
       // small row groups so the test fixture has several to prune (at
       // production sf the default 128 MB groups give the same shape)

@@ -96,7 +96,7 @@ class PromqlSpec extends AnyFunSuite {
       (1L, "click", t0 + 2000000L, 3.0, 3L), (1L, "click", t0 + 3000000L, 4.0, 4L))
       .toDF("user_id", "event_type", "us", "value", "event_id")
       .withColumn("ts", timestamp_micros(col("us")))
-    val tmp = "/root/repo/target/tmp/promql_reset_events"
+    val tmp = SparkFixture.tmp("promql_reset_events")
     rows.select("user_id", "event_type", "ts", "value", "event_id")
       .withColumn("ts", unix_micros(col("ts")) * 1000) // raw ns long, as testdata
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
@@ -187,7 +187,7 @@ class PromqlSpec extends AnyFunSuite {
       // series 1 emits 5.0 at t0+120: steps >= 120s see the newer sample
       (1L, (t0 + 120L) * 1000000L, 5.0, 4L))
       .toDF("user_id", "us", "value", "event_id")
-    val tmp = "/root/repo/target/tmp/promql_stepped_events"
+    val tmp = SparkFixture.tmp("promql_stepped_events")
     rows.select(col("event_id"), (col("us") * 1000).as("ts"), col("user_id"),
       lit("click").as("event_type"), col("value"), lit("{}").as("props"))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
@@ -206,7 +206,7 @@ class PromqlSpec extends AnyFunSuite {
     // count_over_time(click[2m]) at 60s steps over the same synthetic
     // table: window (t-120s, t] — overlapping, unlike tumbling buckets
     val t0 = 1704067200L
-    val tmp = "/root/repo/target/tmp/promql_stepped_events"
+    val tmp = SparkFixture.tmp("promql_stepped_events")
     val spec = Promql.EvalSpec(t0, t0 + 300L, 60L)
     val got = Promql.queryAt(spark, tmp, "count_over_time(click[2m])", spec)
       .groupBy("step").agg(sum("value").as("n"))
@@ -436,7 +436,7 @@ class PromqlSpec extends AnyFunSuite {
       // then cannot raise it back (pre-clamp min would have given 54)
       (4L, t0 + 100L, 1.8, 8L), (4L, t0 + 160L, 3.8, 9L))
       .toDF("user_id", "sec", "value", "event_id")
-    val tmp = "/root/repo/target/tmp/promql_extrap_events"
+    val tmp = SparkFixture.tmp("promql_extrap_events")
     rows.select(col("event_id"), (col("sec") * 1000000000L).as("ts"), col("user_id"),
       lit("click").as("event_type"), col("value"), lit("{}").as("props"))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
@@ -486,7 +486,7 @@ class PromqlSpec extends AnyFunSuite {
 
   test("@ modifier pins evaluation time; value replicated across the grid") {
     val t0 = 1704067200L
-    val tmp = "/root/repo/target/tmp/promql_stepped_events" // written above
+    val tmp = SparkFixture.tmp("promql_stepped_events") // written above
     val spec = Promql.EvalSpec(t0, t0 + 300L, 60L, lookbackSec = 300L)
     // instant at t0: the three series' 1.0 samples — sum 3 at EVERY step
     val at = Promql.queryAt(spark, tmp, "sum(click @ " + t0 + ")", spec)
@@ -511,7 +511,7 @@ class PromqlSpec extends AnyFunSuite {
 
   test("subqueries: outer range functions over inner evaluations") {
     val t0 = 1704067200L
-    val tmp = "/root/repo/target/tmp/promql_stepped_events" // written above
+    val tmp = SparkFixture.tmp("promql_stepped_events") // written above
     val spec = Promql.EvalSpec(t0 + 240L, t0 + 240L, 60L, lookbackSec = 300L)
     // inner sum(click) on the 1m grid: 3.0 at t0,+60; 7.0 from +120 on.
     // outer window (t0, t0+240] sees inner steps +60..+240 → 3,7,7,7
@@ -635,7 +635,7 @@ class PromqlSpec extends AnyFunSuite {
 
   test("@ on absent(): pinned presence decides the whole grid") {
     val t0 = 1704067200L
-    val tmp = "/root/repo/target/tmp/promql_stepped_events" // written above
+    val tmp = SparkFixture.tmp("promql_stepped_events") // written above
     val spec = Promql.EvalSpec(t0, t0 + 300L, 60L, lookbackSec = 300L)
     // click has samples in (t0-300, t0] → absent is empty everywhere
     assert(Promql.queryAt(spark, tmp, s"absent(click @ $t0)", spec).count() === 0)
@@ -719,7 +719,7 @@ class PromqlSpec extends AnyFunSuite {
     val rows = Seq((9L, t0 + 10L, 10.0, 21L), (9L, t0 + 20L, 12.0, 22L),
       (9L, t0 + 30L, 11.0, 23L), (9L, t0 + 40L, 15.0, 24L))
       .toDF("user_id", "sec", "value", "event_id")
-    val tmp = "/root/repo/target/tmp/promql_holt_events"
+    val tmp = SparkFixture.tmp("promql_holt_events")
     rows.select(col("event_id"), (col("sec") * 1000000000L).as("ts"), col("user_id"),
       lit("click").as("event_type"), col("value"), lit("{}").as("props"))
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")

@@ -19,7 +19,7 @@ class RecordingRuleStreamSpec extends AnyFunSuite {
   private val Expr = "sum by (user_id)(sum_over_time(purchase[1h]))"
 
   test("maintained store equals the batch recorder below the horizon; serves through the seam") {
-    val base = "/root/repo/target/tmp/recrulestream"
+    val base = SparkFixture.tmp("recrulestream")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val store = s"$base/store"; val chk = s"$base/chk"
     Files.createDirectories(Paths.get(in))

@@ -15,7 +15,7 @@ class ResultCacheSpec extends AnyFunSuite {
   private val H = 3600L
   private def clearCache(): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}")))
 
   test("two sessions racing write+compact on one key serialize through the locks, grid stays exact") {
     // VERDICT r16 #6: the cross-process writer lock (a create-exclusive
@@ -50,7 +50,7 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(got.count() > 0)
     // the lock released cleanly: no _lock_ files left behind
     val root = new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}")
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
     assert(!root.listFiles().exists(_.getName.startsWith("_lock_")),
       "released locks must not leak")
   }
@@ -62,7 +62,7 @@ class ResultCacheSpec extends AnyFunSuite {
     // prime once to learn the key's base, then clear
     ResultCache.queryCached(spark, sf, q, spec).count()
     val root = new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}")
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
     clearCache()
     java.nio.file.Files.createDirectories(root.toPath)
     // a FRESH foreign lock (another process mid-write): our writer must
@@ -156,7 +156,7 @@ class ResultCacheSpec extends AnyFunSuite {
     val full = Promql.EvalSpec(1704067200L, 1704153600L, H, 7200L)
     ResultCache.queryCached(spark, sf, "sum(click)", head).count()
     val root = new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}")
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
     def ivDirs() = root.listFiles().flatMap(_.listFiles())
       .map(_.getName).filter(_.startsWith("iv_")).toSet
     val before = ivDirs()
@@ -195,7 +195,7 @@ class ResultCacheSpec extends AnyFunSuite {
         Promql.EvalSpec(start, end, H, 7200L)).count()
     }
     val root = new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}")
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
     val ivDirs = root.listFiles().flatMap(_.listFiles())
       .map(_.getName).filter(_.startsWith("iv_"))
     assert(ivDirs.length <= ResultCache.CompactAt + 1,
@@ -213,7 +213,7 @@ class ResultCacheSpec extends AnyFunSuite {
     val spec = Promql.EvalSpec(1704067200L, 1704110400L, H, 7200L)
     ResultCache.queryCached(spark, sf, "sum(click)", spec).count()
     val root = new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}")
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
     val iv = root.listFiles().flatMap(_.listFiles())
       .find(_.getName.startsWith("iv_")).get
     // simulate a writer killed mid-overwrite: data files partially
@@ -233,7 +233,7 @@ class ResultCacheSpec extends AnyFunSuite {
     val spec = Promql.EvalSpec(1704067200L, 1704110400L, H, 7200L)
     ResultCache.queryCached(spark, sf, "sum(click)", spec).count()
     val root = new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}")
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
     val key = root.listFiles().filter(_.isDirectory).head.getName
     val base = key.substring(0, key.lastIndexOf('_'))
     // simulate N prior in-place corpus regenerations: sibling keys of
@@ -276,7 +276,7 @@ class ResultCacheSpec extends AnyFunSuite {
     ResultCache.queryCached(spark, sf, "sum(click)", shifted).count()
     ResultCache.queryCached(spark, sf, "sum(click)", widened).count()
     val root = new java.io.File(
-      s"/root/repo/target/tmp/result_cache_${graft.sources.ChunkStore.pathTag(sf)}")
+      SparkFixture.tmp(s"result_cache_${graft.sources.ChunkStore.pathTag(sf)}"))
     assert(root.listFiles().count(_.isDirectory) === 3,
       "three incompatible grids must occupy three cache keys")
     // and the shifted grid's values are their own evaluation

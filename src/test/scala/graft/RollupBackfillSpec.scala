@@ -24,7 +24,7 @@ class RollupBackfillSpec extends AnyFunSuite {
     col("ts") < lit("2024-01-09") && pmod(col("user_id"), lit(5)) === 2
 
   private def freshDirs(tag: String): (String, String, String) = {
-    val base = s"/root/repo/target/tmp/rollup_backfill_$tag"
+    val base = SparkFixture.tmp(s"rollup_backfill_$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     Files.createDirectories(Paths.get(s"$base/in"))
     (s"$base/in", s"$base/store", s"$base/cp")
@@ -118,7 +118,7 @@ class RollupBackfillSpec extends AnyFunSuite {
     // hour's increment, not silently skip it while the marker claims
     // coverage. Driven directly against a handcrafted fold level.
     import spark.implicits._
-    val store = "/root/repo/target/tmp/rollup_backfill_unit"
+    val store = SparkFixture.tmp("rollup_backfill_unit")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
     val dir = s"$store/fold_3600s"
     Files.createDirectories(Paths.get(dir))

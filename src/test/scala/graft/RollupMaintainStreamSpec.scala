@@ -22,7 +22,7 @@ class RollupMaintainStreamSpec extends AnyFunSuite {
   private val dir01 = "/root/testdata/sf0.01"
 
   private def freshDirs(tag: String): (String, String, String) = {
-    val base = s"/root/repo/target/tmp/rollup_maintain_$tag"
+    val base = SparkFixture.tmp(s"rollup_maintain_$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     Files.createDirectories(Paths.get(s"$base/in"))
     (s"$base/in", s"$base/store", s"$base/cp")

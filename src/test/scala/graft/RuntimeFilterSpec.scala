@@ -53,8 +53,8 @@ class RuntimeFilterSpec extends AnyFunSuite {
   }
 
   test("dynamic partition pruning fires on the date-partitioned store") {
-    val store = "/root/repo/target/tmp/test_dpp_fact"
-    val dimStore = "/root/repo/target/tmp/test_dpp_dim"
+    val store = SparkFixture.tmp("test_dpp_fact")
+    val dimStore = SparkFixture.tmp("test_dpp_dim")
     if (!new java.io.File(s"$store/_SUCCESS").isFile) {
       Tables.events(spark, sf)
         .select(col("event_id"), col("event_type"), col("value"),

@@ -156,12 +156,13 @@ class SimilaritySpec extends AnyFunSuite {
       val c1 = Similarity.trainedCentroids(spark, sf, k = 8, iters = 2)
       val stores = new java.io.File(tmp).list().filter(_.startsWith("ivf_centroids_"))
       assert(stores.length === 1, "training must persist exactly one centroid table")
-      // same-JVM reuse: the memo returns the SAME index, zero Spark jobs
+      // same-session reuse: the memo returns the SAME index, zero Spark jobs
       assert(Similarity.trainedCentroids(spark, sf, k = 8, iters = 2) eq c1)
-      // fresh-JVM path: clear the memo, count the jobs a reuse needs —
-      // the parquet read is 1-2 jobs; training would need >= 1 + iters
-      // (seed collect + one aggregate per iteration)
-      Similarity.clearTrainedMemo()
+      // fresh-JVM path: a new session has no memo; count the jobs a
+      // reuse needs — the parquet read is 1-2 jobs; training would need
+      // >= 1 + iters (seed collect + one aggregate per iteration)
+      val fresh = spark.newSession()
+      fresh.conf.set("spark.graft.store.root", tmp)
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -170,7 +171,7 @@ class SimilaritySpec extends AnyFunSuite {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        val c3 = Similarity.trainedCentroids(spark, sf, k = 8, iters = 2)
+        val c3 = Similarity.trainedCentroids(fresh, sf, k = 8, iters = 2)
         Thread.sleep(1000) // let the async listener bus drain
         assert(c3 === c1, "a read-back index must equal the trained one bit-exactly")
         assert(jobs.get() <= 2,
@@ -178,10 +179,7 @@ class SimilaritySpec extends AnyFunSuite {
       } finally spark.sparkContext.removeSparkListener(listener)
       // the trained searcher works off the persisted index
       assert(Similarity.ivfTrained(spark, sf, numCells = 8, iters = 2).count() > 0)
-    } finally {
-      spark.conf.unset("spark.graft.store.root")
-      Similarity.clearTrainedMemo()
-    }
+    } finally spark.conf.set("spark.graft.store.root", SparkFixture.storeRoot)
   }
 
   // ---- driver-side PQ/IVF reference (mirrors the quantized kernels) ----
@@ -267,10 +265,11 @@ class SimilaritySpec extends AnyFunSuite {
       val cb1 = Similarity.trainedPqCodebooks(spark, sf, iters = 2)
       assert(cb1.length === Similarity.PqSub)
       assert(cb1.forall(_.length === Similarity.PqCodes))
-      // same-JVM reuse returns the identical object; fresh-JVM path
-      // (memo cleared) reads the store without retraining
+      // same-session reuse returns the identical object; fresh-JVM
+      // path (a new session, no memo) reads the store without retraining
       assert(Similarity.trainedPqCodebooks(spark, sf, iters = 2) eq cb1)
-      Similarity.clearTrainedPqMemo()
+      val fresh = spark.newSession()
+      fresh.conf.set("spark.graft.store.root", tmp)
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -279,7 +278,7 @@ class SimilaritySpec extends AnyFunSuite {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        val cb2 = Similarity.trainedPqCodebooks(spark, sf, iters = 2)
+        val cb2 = Similarity.trainedPqCodebooks(fresh, sf, iters = 2)
         Thread.sleep(1000)
         assert(cb2 === cb1, "read-back codebooks must equal the trained ones")
         assert(jobs.get() <= 2,
@@ -303,10 +302,7 @@ class SimilaritySpec extends AnyFunSuite {
         s"trained $trainedErr should beat formula $formulaErr")
       // the searcher works off the persisted book
       assert(Similarity.pqTrained(spark, sf, iters = 2).count() > 0)
-    } finally {
-      spark.conf.unset("spark.graft.store.root")
-      Similarity.clearTrainedPqMemo()
-    }
+    } finally spark.conf.set("spark.graft.store.root", SparkFixture.storeRoot)
   }
 
   test("nprobe=2 residual IVFPQ: per-probed-cell tables equal the reference") {
@@ -609,9 +605,11 @@ class SimilaritySpec extends AnyFunSuite {
         Seq("qid", "vec_id"), "left_semi").count()
       assert(hits4 / 25.0 < untrained,
         s"4-bit trained (${hits4 / 25.0}) should collapse below untrained ($untrained)")
-      // write-once: a fresh-JVM path (memo cleared) reads the persisted
-      // books without retraining (training needs >= 1 + iters jobs)
-      Similarity.clearTrainedPqMemo()
+      // write-once: a fresh-JVM path (a new session, no memo) reads the
+      // persisted books without retraining (training needs >= 1 + iters
+      // jobs)
+      val fresh = spark.newSession()
+      fresh.conf.set("spark.graft.store.root", tmp)
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -620,16 +618,12 @@ class SimilaritySpec extends AnyFunSuite {
       }
       spark.sparkContext.addSparkListener(listener)
       try {
-        Similarity.trainedResidualPqCodebooks(spark, dir)
+        Similarity.trainedResidualPqCodebooks(fresh, dir)
         Thread.sleep(1000)
         assert(jobs.get() <= 2,
           s"store reuse must not retrain: ${jobs.get()} jobs")
       } finally spark.sparkContext.removeSparkListener(listener)
-    } finally {
-      spark.conf.unset("spark.graft.store.root")
-      Similarity.clearTrainedPqMemo()
-      Similarity.clearTrainedMemo()
-    }
+    } finally spark.conf.set("spark.graft.store.root", SparkFixture.storeRoot)
   }
 
   test("clustered corpus: tuned legs prune candidates, not just recall") {

@@ -8,7 +8,7 @@ import SparkFixture.{sf, spark}
 class SortedWriterSpec extends AnyFunSuite {
 
   test("sorted write preserves content and orders rows within every file") {
-    val out = "/root/repo/target/tmp/test_sorted"
+    val out = SparkFixture.tmp("test_sorted")
     SortedWriter.writeSorted(spark, sf, out)
     val back = spark.read.parquet(out)
     assert(back.count() === Tables.events(spark, sf).count())
@@ -31,7 +31,7 @@ class SortedWriterSpec extends AnyFunSuite {
   }
 
   test("files partition the key space: per-file key ranges do not overlap") {
-    val out = "/root/repo/target/tmp/test_sorted"
+    val out = SparkFixture.tmp("test_sorted")
     val ranges = spark.read.parquet(out)
       .groupBy(input_file_name().as("f"))
       .agg(min(struct(col("event_type"), col("user_id"))).as("lo"),
@@ -48,7 +48,7 @@ class SortedWriterSpec extends AnyFunSuite {
   }
 
   test("sorted files carry bloom filters on the label columns") {
-    val out = "/root/repo/target/tmp/test_sorted"
+    val out = SparkFixture.tmp("test_sorted")
     val file = new java.io.File(out).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -67,7 +67,7 @@ class SortedWriterSpec extends AnyFunSuite {
       assert(bloomOf("value") <= 0, "unconfigured columns should not pay for blooms")
     } finally reader.close()
     // the per-label knob: an empty bloomCols writes no blooms at all
-    val outNone = "/root/repo/target/tmp/test_sorted_nobloom"
+    val outNone = SparkFixture.tmp("test_sorted_nobloom")
     SortedWriter.writeSorted(spark, sf, outNone, bloomCols = Seq.empty)
     val f2 = new java.io.File(outNone).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
@@ -85,7 +85,7 @@ class SortedWriterSpec extends AnyFunSuite {
 
   test("part writer lays out part.N.parquet + part.N.metadata; compact merges") {
     import graft.sources.{ChunkStore, PartWriter}
-    val dir = "/root/repo/target/tmp/test_parts"
+    val dir = SparkFixture.tmp("test_parts")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     new java.io.File(dir).mkdirs()
     val chunks = ChunkStore.buildChunks(spark, sf).toDF()
@@ -146,8 +146,8 @@ class SortedWriterSpec extends AnyFunSuite {
   test("compaction coalesces fragments; file count scales with input, not dates") {
     val df = SortedWriter.compactionQuery(spark, sf)
     assert(df.count() === Tables.events(spark, sf).count())
-    val compacted = s"/root/repo/target/tmp/compact_${sf.replaceAll("[^A-Za-z0-9.]", "_")}"
-    val fragged = s"/root/repo/target/tmp/frag_${sf.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val compacted = SparkFixture.tmp(s"compact_${sf.replaceAll("[^A-Za-z0-9.]", "_")}")
+    val fragged = SortedWriter.fragmented(spark, sf)
     val datePartitions = new java.io.File(compacted).listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("date="))
     val nCompact = SortedWriter.partFileCount(compacted)
@@ -173,6 +173,6 @@ class SortedWriterSpec extends AnyFunSuite {
       graft.sources.ChunkStore.chunkMeta(spark, sf).count()
       assert(new java.io.File(tmp).list().exists(_.startsWith("chunks_")),
         "the chunk store must follow the configured root")
-    } finally spark.conf.unset("spark.graft.store.root")
+    } finally spark.conf.set("spark.graft.store.root", SparkFixture.storeRoot)
   }
 }

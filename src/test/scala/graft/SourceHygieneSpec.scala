@@ -10,16 +10,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * query that created it — driver-side concurrency goes through
   * [[Par]]), identity-hash memo keys (a dead session's hash can be
   * reused — memos go through [[Memo]]), and NUL bytes (they make grep
-  * treat a source as binary; write `\u0000` instead).
+  * treat a source as binary; write `\u0000` instead). Main and test
+  * sources also carry no absolute checkout path: stores live under
+  * `spark.graft.store.root`, and specs use [[SparkFixture.tmp]].
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
-  private val sources: Seq[Path] = {
-    val root = Paths.get("src/main/scala")
-    val walk = Files.walk(root)
+  private def scalaFiles(dir: String): Seq[Path] = {
+    val walk = Files.walk(Paths.get(dir))
     try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
     finally walk.close()
   }
+
+  private val sources: Seq[Path] = scalaFiles("src/main/scala")
 
   test("main sources are found") {
     assert(sources.exists(_.endsWith("graft/Exec.scala")), s"scanned: $sources")
@@ -37,5 +40,13 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("no main source contains a NUL byte") {
     val hits = sources.filter(p => Files.readAllBytes(p).contains(0.toByte))
     assert(hits.isEmpty, s"write NUL as the \\u0000 escape: $hits")
+  }
+
+  test("no main or test source hardcodes the checkout path") {
+    // built from parts, so this spec does not match itself
+    val checkout = Seq("", "root", "repo").mkString("/")
+    val hits = (sources ++ scalaFiles("src/test/scala"))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(checkout))
+    assert(hits.isEmpty, s"use spark.graft.store.root or SparkFixture.tmp: $hits")
   }
 }

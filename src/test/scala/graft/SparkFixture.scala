@@ -11,10 +11,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkFixture {
   val sf = "/root/testdata/sf0.001"
 
+  /** A fresh store root per test JVM (`spark.graft.store.root`), so two
+    * checkouts or concurrent runs never share or collide on a store.
+    * Deleted when the JVM exits.
+    */
+  lazy val storeRoot: String = {
+    val root = java.nio.file.Files.createTempDirectory("graft-test-").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root))
+    root.getPath
+  }
+
+  /** A scratch path under the per-JVM store root. */
+  def tmp(name: String): String = s"$storeRoot/$name"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config("spark.graft.store.root", storeRoot)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

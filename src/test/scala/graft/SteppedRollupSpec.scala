@@ -141,7 +141,7 @@ class SteppedRollupSpec extends AnyFunSuite {
     // stage a dataset holding one sample EXACTLY on a 300s boundary —
     // the left-open (t−W, t] window excludes it at t−W while its bucket
     // includes it, so bucket-union serving would over-count
-    val root = "/root/repo/target/tmp/stepped_dirty"
+    val root = SparkFixture.tmp("stepped_dirty")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val base = spark.read.parquet(s"$sf/events.parquet")
     val edge = base.limit(1)

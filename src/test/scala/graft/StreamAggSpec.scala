@@ -10,9 +10,9 @@ import SparkFixture.{sf, spark}
 class StreamAggSpec extends AnyFunSuite {
 
   private def stageInput(tag: String): String = {
-    val in = s"/root/repo/target/tmp/streamagg_$tag/in"
+    val in = SparkFixture.tmp(s"streamagg_$tag/in")
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"/root/repo/target/tmp/streamagg_$tag"))
+      new java.io.File(SparkFixture.tmp(s"streamagg_$tag")))
     Files.createDirectories(Paths.get(in))
     Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$in/events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
@@ -114,7 +114,7 @@ class StreamAggSpec extends AnyFunSuite {
 
   test("live sessionize emits each session exactly once across batches") {
     import SparkFixture.spark.implicits._
-    val base = "/root/repo/target/tmp/streamagg_live"
+    val base = SparkFixture.tmp("streamagg_live")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"
     Files.createDirectories(Paths.get(in))
@@ -169,7 +169,7 @@ class StreamAggSpec extends AnyFunSuite {
 
   test("delayed out-of-order event cannot move a session end backwards") {
     import SparkFixture.spark.implicits._
-    val base = "/root/repo/target/tmp/streamagg_ooo"
+    val base = SparkFixture.tmp("streamagg_ooo")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))
@@ -210,7 +210,7 @@ class StreamAggSpec extends AnyFunSuite {
 
   test("delayed event older than the open session's reach is dropped, not merged") {
     import SparkFixture.spark.implicits._
-    val base = "/root/repo/target/tmp/streamagg_late"
+    val base = SparkFixture.tmp("streamagg_late")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))

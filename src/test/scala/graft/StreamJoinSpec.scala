@@ -10,9 +10,9 @@ import SparkFixture.{sf, spark, planOf}
 class StreamJoinSpec extends AnyFunSuite {
 
   private def stageInput(tag: String): String = {
-    val in = s"/root/repo/target/tmp/streamjoin_$tag/in"
+    val in = SparkFixture.tmp(s"streamjoin_$tag/in")
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"/root/repo/target/tmp/streamjoin_$tag"))
+      new java.io.File(SparkFixture.tmp(s"streamjoin_$tag")))
     Files.createDirectories(Paths.get(in))
     Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$in/events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)

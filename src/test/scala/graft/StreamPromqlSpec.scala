@@ -14,9 +14,9 @@ import SparkFixture.{sf, spark}
 class StreamPromqlSpec extends AnyFunSuite {
 
   private def stageInput(tag: String): String = {
-    val in = s"/root/repo/target/tmp/streampromql_$tag/in"
+    val in = SparkFixture.tmp(s"streampromql_$tag/in")
     org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"/root/repo/target/tmp/streampromql_$tag"))
+      new java.io.File(SparkFixture.tmp(s"streampromql_$tag")))
     Files.createDirectories(Paths.get(in))
     Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$in/events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
@@ -60,7 +60,7 @@ class StreamPromqlSpec extends AnyFunSuite {
   test("live append run emits each closed window exactly once across batches") {
     import SparkFixture.spark.implicits._
     import org.apache.spark.sql.functions.col
-    val base = "/root/repo/target/tmp/streampromql_live"
+    val base = SparkFixture.tmp("streampromql_live")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))
@@ -144,7 +144,7 @@ class StreamPromqlSpec extends AnyFunSuite {
                                         rangeSec: Long): Unit = {
     import SparkFixture.spark.implicits._
     import org.apache.spark.sql.functions.col
-    val base = s"/root/repo/target/tmp/streampromql_$tag"
+    val base = SparkFixture.tmp(s"streampromql_$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val in = s"$base/in"; val chk = s"$base/chk"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))

@@ -43,7 +43,7 @@ class TfidfKnnSpec extends AnyFunSuite {
   }
 
   test("block-size cap cuts hot-block pair generation, keeps small blocks") {
-    val dir = "/root/repo/target/tmp/tfidf_cap_fixture"
+    val dir = SparkFixture.tmp("tfidf_cap_fixture")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     import spark.implicits._
     // 8 template docs whose two dominant (repeated) terms agree — one

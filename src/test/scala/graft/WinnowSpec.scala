@@ -25,7 +25,7 @@ class WinnowSpec extends AnyFunSuite {
   }
 
   test("documents sharing a w+2-word run share a fingerprint (MOSS guarantee)") {
-    val dir = "/root/repo/target/tmp/winnow_fixture"
+    val dir = SparkFixture.tmp("winnow_fixture")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     import spark.implicits._
     // a 6-word shared run (w + 2 = 6 at w = 4, 3-grams) embedded in
@@ -43,7 +43,7 @@ class WinnowSpec extends AnyFunSuite {
   }
 
   test("posting-list cap drops boilerplate-only pairs, keeps rare-run pairs") {
-    val dir = "/root/repo/target/tmp/winnow_cap_fixture"
+    val dir = SparkFixture.tmp("winnow_cap_fixture")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     import spark.implicits._
     // 6 docs share ONE boilerplate run (its fingerprints' posting

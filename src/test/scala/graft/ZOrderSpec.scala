@@ -21,18 +21,12 @@ class ZOrderSpec extends AnyFunSuite {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long, Long)].toDF("event_id", "user_id", "us")
     val e = intercept[IllegalArgumentException] {
-      ZOrderStore.writeZOrdered(empty, "/root/repo/target/tmp/z_empty", 1)
+      ZOrderStore.writeZOrdered(empty, SparkFixture.tmp("z_empty"), 1)
     }
     assert(e.getMessage.contains("empty"), e.getMessage)
   }
 
   test("z-ordered files form compact boxes: BOTH dimensions prune") {
-    // force a FRESH build: the write-once store on disk may predate a
-    // gridCoord change, and this test asserts the CURRENT layout
-    ZOrderStore.clearMemo()
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-      s"${graft.sources.ChunkStore.storeRoot(spark)}/zorder_" +
-        graft.sources.ChunkStore.pathTag(sf) + "_n16"))
     val path = ZOrderStore.ensureWritten(spark, sf, numFiles = 16)
     val boxes = ZOrderStore.fileBoxes(path, "user_id", "us")
     assert(boxes.size >= 8, s"want many files, got ${boxes.size}")
@@ -68,7 +62,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("ingest-sink compaction re-clusters streamed files into 2-D boxes") {
-    val base = "/root/repo/target/tmp/zcompact"
+    val base = SparkFixture.tmp("zcompact")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
     java.nio.file.Files.copy(
