@@ -12,6 +12,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TimeSeries.rangeSumBy(spark, "/root/testdata/sf0.001")
 
+  /** A fresh session of `s` with the rollup rewrite opted in. */
+  private def rollupSession(s: SparkSession): SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set(graft.plans.RollupRewrite.Flag, "true")
+    s2
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A. scan / projection / pushdown
@@ -101,8 +108,7 @@ object SparkEntry {
       s"SELECT * FROM promql_range('sum(click)', '$d', 1704067200, 1704153600, 3600, 7200)")),
     "q_promql_rollup_sum" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.query(s2, d, """sum(count_over_time(click[1h]))""")
     }),
     // the ENDPOINT verb family from the rollup: last_over_time's
@@ -111,8 +117,7 @@ object SparkEntry {
     // (µs, event_id) total order) — shares the raw entry's oracle hash
     "q_promql_rollup_last" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.query(s2, d, "last_over_time(purchase[1d])")
     }),
     // STEPPED range queries from the rollup (round 13): the Grafana
@@ -121,8 +126,7 @@ object SparkEntry {
     // shares q_promql_stepped's oracle hash
     "q_promql_rollup_stepped" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.queryAt(s2, d, "sum(click)",
         graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L))
     }),
@@ -134,8 +138,7 @@ object SparkEntry {
       graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L))),
     "q_promql_rollup_rate" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.queryAt(s2, d, "rate(click[1h])",
         graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L))
     }),
@@ -149,8 +152,7 @@ object SparkEntry {
       graft.operators.Promql.EvalSpec(1704067200L, 1704412800L, 7200L, 7200L))),
     "q_promql_rollup_stepped_1h" -> ((s, d) => {
       graft.sources.DownsampleStore.table1h(s, d) // build the chain
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.queryAt(s2, d, "sum_over_time(click[1d])",
         graft.operators.Promql.EvalSpec(1704067200L, 1704412800L, 7200L, 7200L))
     }),
@@ -163,8 +165,7 @@ object SparkEntry {
       graft.operators.Promql.EvalSpec(1704067200L, 1706659200L, 86400L, 7200L))),
     "q_promql_rollup_stepped_1d" -> ((s, d) => {
       graft.sources.DownsampleStore.table1d(s, d) // build the chain
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.queryAt(s2, d, "sum_over_time(click[1w])",
         graft.operators.Promql.EvalSpec(1704067200L, 1706659200L, 86400L, 7200L))
     }),
@@ -173,8 +174,7 @@ object SparkEntry {
       graft.operators.Promql.EvalSpec(1704067200L, 1706659200L, 86400L, 7200L))),
     "q_promql_rollup_rate_1d" -> ((s, d) => {
       graft.sources.DownsampleStore.table1d(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.queryAt(s2, d, "rate(click[1w])",
         graft.operators.Promql.EvalSpec(1704067200L, 1706659200L, 86400L, 7200L))
     }),
@@ -189,8 +189,7 @@ object SparkEntry {
       graft.operators.Promql.EvalSpec(1704067200L, 1706659200L, 3600L, 7200L))),
     "q_promql_stepped_fresh" -> ((s, d) => {
       val store = graft.streaming.RollupMaintainStream.demoStore(s, d)
-      val s2 = s.newSession()
-      s2.conf.set(graft.plans.RollupRewrite.Flag, "true")
+      val s2 = rollupSession(s)
       s2.conf.set(graft.plans.RollupRewrite.StreamStoreConf, store)
       s2.conf.set(graft.plans.RollupRewrite.FreshTailConf, "true")
       graft.operators.Promql.queryAt(s2, d, "sum_over_time(click[2h])",
@@ -202,8 +201,7 @@ object SparkEntry {
     // raw; bit-equal to the raw twin (shared oracle hash)
     "q_promql_stepped_fresh_1d" -> ((s, d) => {
       val store = graft.streaming.RollupMaintainStream.demoStore(s, d)
-      val s2 = s.newSession()
-      s2.conf.set(graft.plans.RollupRewrite.Flag, "true")
+      val s2 = rollupSession(s)
       s2.conf.set(graft.plans.RollupRewrite.StreamStoreConf, store)
       s2.conf.set(graft.plans.RollupRewrite.FreshTailConf, "true")
       graft.operators.Promql.queryAt(s2, d, "sum_over_time(click[1w])",
@@ -219,8 +217,7 @@ object SparkEntry {
     "q_promql_stepped_retained" -> ((s, d) => {
       val store = graft.streaming.RollupMaintainStream
         .demoStoreRetained(s, d, 4L * 86400L)
-      val s2 = s.newSession()
-      s2.conf.set(graft.plans.RollupRewrite.Flag, "true")
+      val s2 = rollupSession(s)
       s2.conf.set(graft.plans.RollupRewrite.StreamStoreConf, store)
       s2.conf.set(graft.plans.RollupRewrite.FreshTailConf, "true")
       graft.operators.Promql.queryAt(s2, d, "sum_over_time(click[2h])",
@@ -235,8 +232,7 @@ object SparkEntry {
     // hash-shared with the raw twin over the full corpus.
     "q_promql_stepped_backfill" -> ((s, d) => {
       val store = graft.streaming.RollupBackfill.demoStore(s, d)
-      val s2 = s.newSession()
-      s2.conf.set(graft.plans.RollupRewrite.Flag, "true")
+      val s2 = rollupSession(s)
       s2.conf.set(graft.plans.RollupRewrite.StreamStoreConf, store)
       s2.conf.set(graft.plans.RollupRewrite.FreshTailConf, "true")
       graft.operators.Promql.queryAt(s2, d, "sum_over_time(click[2h])",
@@ -251,8 +247,7 @@ object SparkEntry {
       graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L))),
     "q_promql_rollup_rate_1h" -> ((s, d) => {
       graft.sources.DownsampleStore.table1h(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.queryAt(s2, d, "rate(click[2h])",
         graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L))
     }),
@@ -377,8 +372,7 @@ object SparkEntry {
     // machines — a 30-rule group over a year reads rollup bytes
     "q_promql_rule_group_rollup" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.RuleGroup.evaluateUnion(s2, d,
         graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L),
         Seq(
@@ -405,8 +399,7 @@ object SparkEntry {
     // live chain's partials reproduce the raw evaluation bit-for-bit
     "q_promql_rule_group_live" -> ((s, d) => {
       val store = graft.streaming.RollupMaintainStream.demoStore(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       s2.conf.set(graft.plans.RollupRewrite.StreamStoreConf, store)
       graft.operators.RuleGroup.evaluateUnion(s2, d,
         graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L),
@@ -470,8 +463,7 @@ object SparkEntry {
     // the raw evaluation's oracle
     "q_promql_alert_rollup" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Alerts.rule(s2, d,
         """sum by (event_type) (count_over_time({event_type=~"click|view|purchase|signup|error"}[2h])) > 6""",
         graft.operators.Promql.EvalSpec(1704067200L, 1704153600L, 3600L, 7200L),
@@ -601,14 +593,12 @@ object SparkEntry {
     // opt-in, same gates, hash-shared with the raw twins
     "q_promql_rollup_hist_count" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.query(s2, d, "histogram_count(view[1d])")
     }),
     "q_promql_rollup_hist_sum" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.Promql.query(s2, d, "histogram_sum(view[1d])")
     }),
     "q_promql_hist_stddev" -> ((s, d) => graft.operators.Promql.query(
@@ -900,8 +890,7 @@ object SparkEntry {
     // end, not just in ScalaTest
     "q_rollup_rewrite" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d) // materialize the MV
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.TimeSeries.rangeSumBy(s2, d)
     }),
     // the RULE path's multi-resolution pick, driver-recorded (round 15;
@@ -910,8 +899,7 @@ object SparkEntry {
     // than the 300s level) and must still hash-match the raw oracle
     "q_rollup_rewrite_1h" -> ((s, d) => {
       graft.sources.DownsampleStore.table1h(s, d) // build the chain
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.TimeSeries.rangeSumBy(s2, d)
     }),
     // the widened lossless-measure family (count/min/max/sum) through
@@ -919,8 +907,7 @@ object SparkEntry {
     "q_range_stats_by" -> (graft.operators.TimeSeries.rangeStatsBy _),
     "q_rollup_rewrite_stats" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.TimeSeries.rangeStatsBy(s2, d)
     }),
     // label FILTERS replay on the store (whole-group selection) and the
@@ -929,8 +916,7 @@ object SparkEntry {
     // q_range_sum's oracle
     "q_rollup_rewrite_filtered" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       graft.operators.TimeSeries.rangeSum(s2, d)
     }),
     // user-grain grouping + label filter through the rewrite; the
@@ -938,8 +924,7 @@ object SparkEntry {
     // store-served answer equals raw semantics
     "q_rollup_rewrite_user" -> ((s, d) => {
       graft.sources.DownsampleStore.table(s, d)
-      val s2 = s.newSession()
-      s2.conf.set("spark.graft.rollup.rewrite", "true")
+      val s2 = rollupSession(s)
       import org.apache.spark.sql.functions._
       graft.Tables.events(s2, d)
         .filter(col("event_type") === "click")

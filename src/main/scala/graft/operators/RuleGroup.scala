@@ -381,9 +381,15 @@ object RuleGroup {
     *   - session rewrite flag off, or a verb outside [[RollupVerbs]];
     *   - a window / the grid start / the grid step not aligned to the
     *     store resolution (a misaligned window cuts within buckets);
-    *   - no store level materialized + boundary-clean (the
-    *     SteppedRollup.batchLevel pick — coarsest aligned level wins:
-    *     an hour-aligned group reads 12× fewer rollup rows).
+    *   - no store resolves ([[graft.plans.RollupServing.resolve]]:
+    *     open-left windows, coarsest aligned level — an hour-aligned
+    *     group reads 12× fewer rollup rows);
+    *   - a stream store whose horizon does not close the whole grid:
+    *     an alert rule's for:/keep: machine walks every step in order,
+    *     so a partially-closed grid has no sound "serve the closed
+    *     prefix" — the fallback is the raw scan, never a truncated
+    *     grid (Prometheus evaluates rules a completeness lag behind
+    *     now; here that lag is the store's watermark horizon).
     *
     * Bit-exactness mirrors the stepped front-end's serving argument,
     * verb by verb, re-expressed as CONDITIONAL measures so every rule
@@ -422,119 +428,25 @@ object RuleGroup {
     if (!alignedTo(DownsampleStore.ResolutionSec)) return None
     val wMax = rules.map(_.windowSec).max
     val hasCounter = rules.exists(r => Set("rate", "increase")(r.verb))
-    // store resolution mirrors the stepped front-end's: the explicit
-    // STREAM-MAINTAINED store when the session names one (round 17 —
-    // the completeness-gated LIVE ruler: Prometheus evaluates rules a
-    // completeness lag behind now; here that lag is the store's
-    // watermark horizon), else the coarsest aligned batch level.
-    // Groups gate on the WHOLE grid being closed (spec.endSec ≤
-    // horizon): an alert rule's for:/keep: machine walks every step in
-    // order, so a partially-closed grid cannot serve — unlike a plain
-    // range query there is no sound "serve the closed prefix" for a
-    // state machine, and the fallback is the raw scan, never a
-    // truncated grid. Same dataset / key-rev / boundary / counter-rev
-    // / retention-floor gates as SteppedRollup's stream branch; the
-    // group reads the 300 s parts (fold-band serving stays the
-    // stepped front-end's — a refused floor falls back raw, never
-    // under-counts).
-    import graft.streaming.{RollupCompactor, RollupMaintainStream => RMS}
-    val streamDir = s.conf.get(graft.plans.RollupRewrite.StreamStoreConf, "")
-    // each band: (part dirs, bucket resolution, exclusive step lower
-    // bound, inclusive step upper bound). Stream stores serve BANDED
-    // (round 17, the stepped front-end's fold discipline at group
-    // scale): closed days from the folded 1 d level, then closed hours
-    // from the folded 1 h level, then the 300 s parts — each STEP
-    // served by exactly one level, a fold level joining only when the
-    // whole grid (start/step/every window) aligns to its resolution.
-    // Within one (step, series) partition all covered buckets come
-    // from one band, so the counter lag pass and every measure stay
-    // single-resolution. Batch stores are one coarsest-aligned band.
-    val resolved: Option[Seq[(Seq[String], Long, Option[Long], Option[Long])]] =
-      if (streamDir.nonEmpty) {
-        for {
-          src <- RMS.sourceDir(streamDir)
-          if new java.io.File(src).getCanonicalPath ==
-            new java.io.File(dir).getCanonicalPath
-          if RMS.keyRevOk(streamDir)
-          h <- RMS.horizonSec(streamDir)
-          if spec.endSec <= h
-          e <- RMS.edgeCount(streamDir) if e == 0L
-          if !hasCounter || RMS.counterRevOk(streamDir)
-          paths <- RMS.servingPaths(streamDir)
-        } yield {
-          val lev1d =
-            if (alignedTo(DownsampleStore.DayResolutionSec))
-              RMS.foldedLevel(streamDir, DownsampleStore.DayResolutionSec)
-            else None
-          val lev1h =
-            if (alignedTo(DownsampleStore.HourResolutionSec))
-              RMS.foldedLevel(streamDir, DownsampleStore.HourResolutionSec)
-            else None
-          val h1d = lev1d.map(_._2)
-          val h1h = lev1h.map(_._2)
-          Seq(
-            lev1d.map { case (incs, _) =>
-              (incs, DownsampleStore.DayResolutionSec,
-                Option.empty[Long], h1d) },
-            lev1h.map { case (incs, _) =>
-              (incs, DownsampleStore.HourResolutionSec, h1d, h1h) },
-            Some((paths, DownsampleStore.ResolutionSec,
-              h1h.orElse(h1d), Option.empty[Long]))
-          ).flatten
-        }
-      } else graft.plans.SteppedRollup.batchLevel(s, dir, alignedTo)
-        .map { case (p, r) =>
-          Seq((Seq(p), r, Option.empty[Long], Option.empty[Long])) }
-    if (resolved.isEmpty) return None
-    val bands = resolved.get
-    // retention floor (the SteppedRollup gate): raw-band steps must
-    // read only retained 300 s buckets; a grid reaching below the
-    // floor hands the whole pass back to the raw evaluator
-    if (streamDir.nonEmpty) {
-      val retFloor = RollupCompactor.retainFloor(streamDir)
-      if (retFloor != RollupCompactor.NoFloor) {
-        val rawLo = bands.last._3
-        val tMin = rawLo.fold(spec.startSec) { l =>
-          math.max(spec.startSec, spec.startSec +
-            (Math.floorDiv(l - spec.startSec, spec.stepSec) + 1L) *
-              spec.stepSec)
-        }
-        if (tMin <= spec.endSec && tMin - wMax < retFloor) return None
-      }
-    }
-    // one band's covered frame: store scan (metric union +
-    // bucket-range prune, both pushed) + covering-step explode at the
-    // band's resolution: t − Wmax <= b <= t − bres ⇒
-    // k ∈ [ceil((Δ+bres)/S), floor((Δ+Wmax)/S)] (the stepped
-    // evaluator's law; Δ = b − start stays far below 2^53), then the
-    // band's step bounds
-    def coveredBand(paths: Seq[String], bres: Long,
-                    lo: Option[Long], hi: Option[Long]): DataFrame = {
+    val served = graft.plans.RollupServing.resolve(s, dir, alignedTo,
+        openLeft = true, counters = hasCounter)(sv =>
+        graft.plans.RollupServing.rawLowest(sv, spec, wMax, 0L, spec.endSec))
+      .filter(_.horizon.forall(spec.endSec <= _))
+    if (served.isEmpty) return None
+    // one band's covered frame: metric union + the covering-step
+    // explode over the widest window. Within one (step, series)
+    // partition all covered buckets come from one band, so the counter
+    // lag pass and every measure stay single-resolution.
+    val exploded0 = served.get.bands.map { b =>
       val t = DownsampleStore
-        .readServingPaths(s, paths, counters = hasCounter)
+        .readServingPaths(s, b.paths, counters = hasCounter)
         .filter(col("event_type")
           .isin(rules.flatMap(_.metrics).distinct: _*))
-        .filter(col("bucket") >= lit(spec.startSec - wMax) &&
-          col("bucket") <= lit(spec.endSec - bres))
-      val delta = (col("bucket") - lit(spec.startSec)).cast("double")
-      val kMin = greatest(lit(0L),
-        ceil((delta + lit(bres.toDouble)) / lit(spec.stepSec.toDouble))
-          .cast("long"))
-      val kMax = least(lit(spec.maxK),
-        floor((delta + lit(wMax.toDouble)) / lit(spec.stepSec.toDouble))
-          .cast("long"))
-      val c = t
-        .withColumn("__kmin", kMin).withColumn("__kmax", kMax)
-        .filter(col("__kmin") <= col("__kmax"))
-        .withColumn("__k", explode(sequence(col("__kmin"), col("__kmax"))))
-        .withColumn("step", col("__k") * spec.stepSec + spec.startSec)
+      graft.plans.RollupServing.coveringSteps(t, spec, b.res, wMax, b.lo, b.hi)
         // bucket b in rule r's window (t − W_r, t] ⟺ step − b <= W_r
-        // (>= bres holds by construction)
+        // (>= res holds by construction)
         .withColumn("__bdelta", col("step") - col("bucket"))
-      val c1 = hi.fold(c)(h => c.filter(col("step") <= lit(h)))
-      lo.fold(c1)(l => c1.filter(col("step") > lit(l)))
-    }
-    val exploded0 = bands.map((coveredBand _).tupled).reduce(_ unionAll _)
+    }.reduce(_ unionAll _)
     // counter rules: ONE lag pass over the (step, series) partition
     // gives each bucket its previous covered bucket's endpoint — the
     // boundary-growth pairs (the raw pass's one-lag-covers-all

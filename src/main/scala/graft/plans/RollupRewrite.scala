@@ -369,7 +369,11 @@ case class RollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
           gk.count(_.isInstanceOf[StepK]) == 1 &&
           gk.distinct.size == gk.size
         val stepW = gk.collectFirst { case StepK(w) => w }
-        stepW.flatMap(resolveStore(dir, _)).flatMap { case (bands, horizon) =>
+        // the raw band reads buckets from its lower fold horizon up;
+        // with no fold band joining, from the beginning
+        stepW.flatMap(w => RollupServing.resolve(session, dir, w % _ == 0,
+            openLeft = false, counters = false)(
+            sv => Some(sv.raw.lo.getOrElse(Long.MinValue)))).flatMap { sv =>
           // every output must be a grouped key or a recognized measure
           val kinds = agg.aggregateExpressions.map {
             case a: Alias => classify(dealias(a.child, subst))
@@ -404,101 +408,10 @@ case class RollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
             ((gk.contains(EtK) || pinned(EtK)) &&
               (gk.contains(UserK) || pinned(UserK)))
           if (groupOk && outOk && endpointOk && fCols.forall(_.isDefined))
-            Some(substitute(agg, bands, ok, gk, fCols.flatten, horizon))
+            Some(substitute(agg, sv, ok, gk, fCols.flatten))
           else None
         }
       }
-    }
-  }
-
-  /** Resolve the rollup store serving this session: the
-    * stream-maintained store when [[RollupRewrite.StreamStoreConf]]
-    * names one (freshness = its `_watermark` horizon, returned so the
-    * substitute can cut at complete steps), else the batch MV for the
-    * query's events dir (freshness = existence, the write-once
-    * Artifact contract) at the COARSEST chain level the step width
-    * aligns to (round 14): an hour-multiple step reads the 1 h store —
-    * 12× fewer rows — falling to 300 s when the hour level is absent.
-    * Tumbling windows are closed-left like the buckets, so level
-    * choice needs no boundary-cleanliness gate (unlike the stepped
-    * front-end's open-left windows). No marker / no store → no rewrite.
-    */
-  /** One serving band: part paths, level resolution, and the BUCKET
-    * range it covers ([lo, hi) on the bucket axis; None = unbounded).
-    * Batch stores serve one unbounded band at the coarsest aligned
-    * level; a stream store serves its fold-chain levels as disjoint
-    * bucket ranges (round 16) — closed days from fold_86400s, then
-    * closed hours from fold_3600s, then the 300 s parts. Tumbling step
-    * groups re-aggregate a MIXED-resolution union exactly as long as
-    * the bands tile the bucket axis disjointly and every band's bucket
-    * nests in the step group (stepW % res == 0): partial sums/counts
-    * merge associatively, order statistics compose, and the endpoint
-    * arg-picks order by bucket start, which orders disjoint ranges
-    * chronologically whatever their width.
-    */
-  private type Band = (Seq[String], Long, Option[Long], Option[Long])
-
-  private def resolveStore(dir: String,
-                           stepW: Long): Option[(Seq[Band], Option[Long])] = {
-    val streamDir = session.conf.get(RollupRewrite.StreamStoreConf, "")
-    if (streamDir.nonEmpty) {
-      import graft.streaming.{RollupMaintainStream => RMS}
-      // the store carries its source-dataset identity: a session-level
-      // conf must never serve a DIFFERENT dataset's queries from it
-      // (review r13) — dir mismatch or missing marker → no rewrite
-      for {
-        src <- RMS.sourceDir(streamDir)
-        if new File(src).getCanonicalPath == new File(dir).getCanonicalPath
-        if RMS.keyRevOk(streamDir)
-        h <- RMS.horizonSec(streamDir)
-        // zero-data passes publish markers without landing parts — an
-        // empty store falls back to the raw scan, never throws at plan
-        // time (ADVICE r13)
-        paths <- RMS.servingPaths(streamDir)
-        l1d = if (stepW % DownsampleStore.DayResolutionSec != 0) None
-              else RMS.foldedLevel(streamDir, DownsampleStore.DayResolutionSec)
-        l1h = if (stepW % DownsampleStore.HourResolutionSec != 0) None
-              else RMS.foldedLevel(streamDir, DownsampleStore.HourResolutionSec)
-        // RETENTION floor gate (round 17): raw buckets below the
-        // store's `_compact` floor may have been dropped; the raw band
-        // is complete only above its 1 h-band lower bound (>= floor by
-        // the retention invariant). A grid that cannot join the 1 h
-        // band therefore refuses the rewrite — raw scan, never a
-        // silent under-count.
-        floor = graft.streaming.RollupCompactor.retainFloor(streamDir)
-        if floor == graft.streaming.RollupCompactor.NoFloor || l1h.isDefined
-      } yield {
-        val h1d = l1d.map(_._2)
-        val h1h = l1h.map(_._2)
-        val bands = Seq(
-          l1d.map { case (incs, hh) =>
-            (incs, DownsampleStore.DayResolutionSec, Option.empty[Long],
-              Some(hh)) },
-          l1h.map { case (incs, hh) =>
-            (incs, DownsampleStore.HourResolutionSec, h1d, Some(hh)) },
-          Some((paths, DownsampleStore.ResolutionSec,
-            h1h.orElse(h1d), Option.empty[Long]))
-        ).flatten
-        (bands, Some(h))
-      }
-    } else {
-      // coarsest-first chain pick: 1 d (round 15), then 1 h, then 300 s
-      def levelPick(res: Long, p: String): Option[(Seq[Band], Option[Long])] =
-        if (stepW % res != 0) None
-        else if (new File(p).isDirectory)
-          Some((Seq((Seq(p), res, None, None)), Option.empty[Long]))
-        else None
-      levelPick(DownsampleStore.DayResolutionSec,
-          DownsampleStore.storePath1d(session, dir))
-        .orElse(levelPick(DownsampleStore.HourResolutionSec,
-          DownsampleStore.storePath1h(session, dir)))
-        .orElse {
-          val store = DownsampleStore.storePath(session, dir)
-          if (new File(store).isDirectory)
-            Some((Seq((Seq(store), DownsampleStore.ResolutionSec,
-              None, None)), None))
-          else None
-        }
     }
   }
 
@@ -509,23 +422,24 @@ case class RollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     * Measures the query didn't ask for are pruned by the optimizer's
     * own column pruning.
     */
-  private def substitute(agg: Aggregate, bands: Seq[Band],
+  private def substitute(agg: Aggregate, sv: RollupServing.Serving,
                          outKinds: Seq[OutKind], groupKinds: Seq[OutKind],
-                         filters: Seq[org.apache.spark.sql.Column],
-                         horizon: Option[Long] = None): LogicalPlan = {
-    // disjoint bucket-range bands unioned into one serving frame (one
-    // band for batch stores; the fold-chain levels for stream stores)
-    val read = bands.map { case (paths, _, lo, hi) =>
-      val r = DownsampleStore.readServingPaths(session, paths)
-      val r1 = hi.fold(r)(h => r.filter(col("bucket") < h))
-      lo.fold(r1)(l => r1.filter(col("bucket") >= l))
+                         filters: Seq[org.apache.spark.sql.Column]): LogicalPlan = {
+    // the bands tile the bucket axis disjointly and each band's bucket
+    // nests in the step group (stepW % res == 0), so the step groups
+    // re-aggregate the mixed-resolution union exactly: partials merge
+    // associatively, order statistics compose, and the endpoint picks
+    // order by bucket start, chronological across disjoint ranges
+    val read = sv.bands.map { b =>
+      val r = DownsampleStore.readServingPaths(session, b.paths)
+      val r1 = b.hi.fold(r)(h => r.filter(col("bucket") < h))
+      b.lo.fold(r1)(l => r1.filter(col("bucket") >= l))
     }.reduce(_ unionAll _)
-    // stream-maintained store: serve ONLY steps whose whole window
-    // closes at or before the staleness horizon — a half-flushed step
-    // must not serve as the step's total (the explicit bound the
-    // StreamStoreConf opt-in buys)
+    // a stream store serves only steps whose whole window closes at or
+    // before its horizon: a half-flushed step must not serve as the
+    // step's total
     val stepW = groupKinds.collectFirst { case StepK(w) => w }.get
-    val bounded = horizon.fold(read)(h =>
+    val bounded = sv.horizon.fold(read)(h =>
       read.filter(expr(s"(bucket div $stepW) * $stepW + $stepW <= $h")))
     val src = filters.foldLeft(bounded)(_.filter(_))
     val keyCols = groupKinds.map {

@@ -32,7 +32,7 @@ import graft.sources.DownsampleStore
   * open at the left. Bucket [b, b+300) decomposes into such windows
   * exactly iff no sample sits at a bucket's first microsecond (u ≡ 0
   * mod 300 s), so serving additionally requires the store's
-  * `_edge_count` marker to be zero (DownsampleStore.boundaryClean) —
+  * `_edge_count` marker to be zero (RollupServing.resolve, open-left) —
   * a property recorded once per write-once store. A boundary-dirty
   * store falls back to the raw evaluator, never to a wrong answer.
   */
@@ -75,31 +75,6 @@ object SteppedRollup {
     */
   val CounterFns: Set[String] = Set("rate", "increase")
 
-  /** Coarsest-first BATCH store level pick — 1 d (round 15), then 1 h,
-    * then 300 s (Thanos's auto-downsampling resolution pick): a level
-    * serves only when the whole grid aligns to it (`alignedTo`), the
-    * store is committed (its directory exists), and it is boundary-clean; a
-    * finer level is never refused because a coarser one is absent.
-    * Shared between the stepped front-end and the rule-group compiler
-    * (round 17) so both make the identical access-path choice.
-    */
-  def batchLevel(s: SparkSession, dir: String,
-                 alignedTo: Long => Boolean): Option[(String, Long)] = {
-    def pick(res: Long, p: String, clean: => Boolean): Option[(String, Long)] =
-      if (!alignedTo(res)) None
-      else if (new java.io.File(p).isDirectory && clean) Some((p, res))
-      else None
-    pick(DownsampleStore.DayResolutionSec,
-        DownsampleStore.storePath1d(s, dir),
-        DownsampleStore.boundaryClean1d(s, dir))
-      .orElse(pick(DownsampleStore.HourResolutionSec,
-        DownsampleStore.storePath1h(s, dir),
-        DownsampleStore.boundaryClean1h(s, dir)))
-      .orElse(pick(DownsampleStore.ResolutionSec,
-        DownsampleStore.storePath(s, dir),
-        DownsampleStore.boundaryClean(s, dir)))
-  }
-
   /** Serve `fn(sel[windowSec])` at `spec`'s aligned steps from the
     * rollup, or None when any soundness gate fails (caller falls back
     * to the raw evaluator):
@@ -108,9 +83,9 @@ object SteppedRollup {
     *   - selector pins a fixed @ time, carries a non-aligned offset, or
     *     references derived (payload) labels the store doesn't carry;
     *   - a matcher touches anything but the store's own label columns;
-    *   - store not committed or not boundary-clean.
-    */
-  /** @param rawTail re-evaluates the SAME query raw over a narrowed
+    *   - no store resolves ([[RollupServing.resolve]], open-left).
+    *
+    * @param rawTail re-evaluates the SAME query raw over a narrowed
     *   spec — the hybrid fresh-tail hook (round 15; VERDICT r14 #3):
     *   when [[RollupRewrite.FreshTailConf]] is also on and a stream
     *   store's horizon splits the step grid, steps past the horizon
@@ -134,50 +109,24 @@ object SteppedRollup {
         sel.matchers.forall(m => m._1 == "user_id" || m._1 == "event_type") &&
         labels.forall(l => l == "user_id" || l == "event_type")
     if (!shapeOk) return None
-    // store resolution mirrors the tumbling rule's: the explicit
-    // stream-maintained store (horizon = its watermark marker; only
-    // steps whose whole window closes at or before it serve) when the
-    // session names one, else the batch MV (freshness = existence).
-    // Batch serving PICKS THE COARSEST aligned chain level (round 14,
-    // Thanos's auto-downsampling resolution pick): an hour-aligned
-    // query reads the 1 h store — 12× fewer rollup rows — and only
-    // falls to the 300 s level when the hour level is absent, dirty,
-    // or the grid is finer than an hour. The stream store is
-    // 300 s-only (its maintenance loop targets freshness, not depth).
     def alignedTo(r: Long): Boolean =
       windowSec % r == 0 && spec.startSec % r == 0 &&
         spec.stepSec % r == 0 && sel.offsetSec % r == 0
-    val streamDir = s.conf.get(RollupRewrite.StreamStoreConf, "")
-    val resolved: Option[(Seq[String], Option[Long], Long)] =
-      if (streamDir.nonEmpty) {
-        import graft.streaming.{RollupMaintainStream => RMS}
-        // the store's recorded source dataset must be the query's —
-        // a session conf never serves another dataset's data
-        for {
-          src <- RMS.sourceDir(streamDir)
-          if new java.io.File(src).getCanonicalPath ==
-            new java.io.File(dir).getCanonicalPath
-          if RMS.keyRevOk(streamDir)
-          h <- RMS.horizonSec(streamDir)
-          e <- RMS.edgeCount(streamDir) if e == 0L
-          // markers can exist with no parts (zero-data pass) — fall
-          // back to raw, never throw at plan time (ADVICE r13)
-          paths <- RMS.servingPaths(streamDir)
-        } yield (paths, Some(h), R)
-      } else batchLevel(s, dir, alignedTo)
-        .map { case (p, r) => (Seq(p), Option.empty[Long], r) }
-    if (resolved.isEmpty) return None
-    val (store, horizon, res) = resolved.get
-    // counter verbs need the inc_dec partial: always present in the
-    // batch store, present in stream stores from part-schema rev c1 on
-    if (counter && horizon.isDefined && streamDir.nonEmpty &&
-      !graft.streaming.RollupMaintainStream.counterRevOk(streamDir))
-      return None
-    // one store level's covered frame: matchers → offset shift → range
-    // prune → covering-step explode, all parameterized by the level's
-    // resolution (the kMin/kMax law holds at any aligned res)
-    def coveredFor(paths: Seq[String], bres: Long) = {
-      val t = DownsampleStore.readServingPaths(s, paths, counters = counter)
+    val off = sel.offsetSec
+    // every step the raw band serves reads only retained buckets: its
+    // steps end at the horizon (shifted like the band bounds)
+    val served = RollupServing.resolve(s, dir, alignedTo, openLeft = true,
+        counters = counter)(sv => RollupServing.rawLowest(sv, spec, windowSec,
+      off, sv.horizon.fold(spec.endSec)(h => math.min(spec.endSec, h + off))))
+    if (served.isEmpty) return None
+    val horizon = served.get.horizon
+    // one band's covered frame: matchers → offset shift → covering-step
+    // explode at the band's resolution. Band bounds shift with the
+    // offset: step t's window reads original-axis buckets up to t − off,
+    // and the raw band serves only steps whose window closes at the
+    // horizon
+    val covered = served.get.bands.map { b =>
+      val t = DownsampleStore.readServingPaths(s, b.paths, counters = counter)
       val named =
         if (sel.metric.isEmpty) t else t.filter(col("event_type") === sel.metric)
       // label matchers replay verbatim on the store's own label columns
@@ -187,96 +136,16 @@ object SteppedRollup {
       // offset shifts the sample axis by a bucket-aligned amount, so the
       // store serves it by shifting the bucket axis
       val shifted =
-        if (sel.offsetSec == 0L) matched
-        else matched.withColumn("bucket", col("bucket") + lit(sel.offsetSec))
-      // bucket b (covering [b, b+res) on the shifted axis) lies wholly
-      // inside step t's window (t − W, t] iff t − W <= b <= t − res — the
-      // range prune reaches the store's parquet row groups (the store is
-      // range-partitioned and sorted on bucket)
-      val pruned = shifted.filter(
-        col("bucket") >= lit(spec.startSec - windowSec) &&
-          col("bucket") <= lit(spec.endSec - bres))
-      // covering steps of a bucket: t = A + kS with
-      //   kMin = ceil((b + res − A) / S), kMax = floor((b + W − A) / S),
-      // clamped to the spec grid. Deltas stay far below 2^53, so the
-      // double floor/ceil is exact (the raw evaluator's same argument).
-      val delta = (col("bucket") - lit(spec.startSec)).cast("double")
-      val kMin = greatest(lit(0L),
-        ceil((delta + lit(bres.toDouble)) / lit(spec.stepSec.toDouble)).cast("long"))
-      val kMax = least(lit(spec.maxK),
-        floor((delta + lit(windowSec.toDouble)) / lit(spec.stepSec.toDouble)).cast("long"))
-      pruned
-        .withColumn("__sr_kmin", kMin).withColumn("__sr_kmax", kMax)
-        .filter(col("__sr_kmin") <= col("__sr_kmax"))
-        .withColumn("__sr_k", explode(sequence(col("__sr_kmin"), col("__sr_kmax"))))
-        .withColumn("step", col("__sr_k") * spec.stepSec + spec.startSec)
-    }
-    // BANDS (round 16; VERDICT r15 #2): with a stream store, each step
-    // is served by EXACTLY ONE level — closed days by the folded 1 d
-    // level, then closed hours by the folded 1 h level, then the 300 s
-    // parts up to the store horizon. Band bounds shift with the
-    // selector offset exactly like the horizon gate did: step t's
-    // window reads ORIGINAL-axis buckets up to t − offset, all folded
-    // into level L iff t − offset ≤ L's horizon — later steps fall to
-    // the next finer band, never serve partial. A fold level joins
-    // only when the whole grid aligns to its resolution.
-    val bands: Seq[(Seq[String], Long, Option[Long], Option[Long])] =
-      if (horizon.isEmpty) Seq((store, res, None, None))
-      else {
-        import graft.streaming.{RollupMaintainStream => RMS}
-        val off = sel.offsetSec
-        val lev1d =
-          if (alignedTo(DownsampleStore.DayResolutionSec))
-            RMS.foldedLevel(streamDir, DownsampleStore.DayResolutionSec)
-          else None
-        val lev1h =
-          if (alignedTo(DownsampleStore.HourResolutionSec))
-            RMS.foldedLevel(streamDir, DownsampleStore.HourResolutionSec)
-          else None
-        val h1d = lev1d.map(_._2 + off)
-        val h1h = lev1h.map(_._2 + off)
-        Seq(
-          lev1d.map { case (incs, _) =>
-            (incs, DownsampleStore.DayResolutionSec, Option.empty[Long], h1d) },
-          lev1h.map { case (incs, _) =>
-            (incs, DownsampleStore.HourResolutionSec, h1d, h1h) },
-          Some((store, res, h1h.orElse(h1d),
-            Some(horizon.get + off)))
-        ).flatten
-      }
-    // RETENTION floor gate (round 17; VERDICT r16 #1): raw buckets
-    // below the store's `_compact` floor may have been dropped — every
-    // step the raw band serves must read only retained buckets. The
-    // earliest raw-band step is the first grid point above the band's
-    // lower bound (the 1h/1d fold horizon when those bands joined);
-    // its window reads original-axis buckets down to tMin − W − off.
-    // A query reaching below the floor hands back to the raw events
-    // evaluator — slower, never under-counted. Fold-band steps are
-    // unaffected (those levels are never retention-dropped).
-    if (horizon.isDefined && streamDir.nonEmpty) {
-      val floor = graft.streaming.RollupCompactor.retainFloor(streamDir)
-      if (floor != graft.streaming.RollupCompactor.NoFloor) {
-        val rawLo = bands.last._3 // the raw band's step lower bound
-        val tMin = rawLo.fold(spec.startSec) { l =>
-          math.max(spec.startSec, spec.startSec +
-            (Math.floorDiv(l - spec.startSec, spec.stepSec) + 1L) *
-              spec.stepSec)
-        }
-        val rawHi = horizon.get + sel.offsetSec
-        if (tMin <= math.min(spec.endSec, rawHi) &&
-            tMin - windowSec - sel.offsetSec < floor) return None
-      }
-    }
-    val covered = bands.map { case (paths, bres, lo, hi) =>
-      val c = coveredFor(paths, bres)
-      val c1 = hi.fold(c)(h => c.filter(col("step") <= lit(h)))
-      lo.fold(c1)(l => c1.filter(col("step") > lit(l)))
+        if (off == 0L) matched
+        else matched.withColumn("bucket", col("bucket") + lit(off))
+      RollupServing.coveringSteps(shifted, spec, b.res, windowSec,
+        b.lo.map(_ + off), b.hi.orElse(horizon).map(_ + off))
     }.reduce(_ unionAll _)
     // hybrid fresh-tail (round 15; VERDICT r14 #3): with the opt-in on,
     // steps past the horizon re-evaluate RAW over only the tail's time
     // range instead of being withheld. hServable is the last servable
     // step value; the first open step is the next grid point after it.
-    val hServable = horizon.map(_ + sel.offsetSec)
+    val hServable = horizon.map(_ + off)
     val freshTail = horizon.isDefined &&
       s.conf.get(RollupRewrite.FreshTailConf, "false").toBoolean
     // nothing closed at all → the hybrid IS the raw evaluation; hand
@@ -286,9 +155,7 @@ object SteppedRollup {
       hServable.filter(_ => freshTail).flatMap { hs =>
         if (hs >= spec.endSec) None // whole grid closed — no tail
         else {
-          val firstOpen = spec.startSec +
-            (Math.floorDiv(hs - spec.startSec, spec.stepSec) + 1L) *
-              spec.stepSec
+          val firstOpen = RollupServing.stepAfter(spec, hs)
           if (firstOpen > spec.endSec) None
           else Some(spec.copy(startSec = firstOpen))
         }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.streaming.{RollupMaintainStream => RMS}
 
 /** Thanos/M3-style downsampling store: a 5-minute-resolution rollup of
   * the events TSDB, answering long-range aggregate queries from a table
@@ -148,8 +149,8 @@ object DownsampleStore {
   private def path(s: SparkSession, dir: String, resolutionSec: Long): String =
     graft.Artifact.path(s, tag(resolutionSec), s"$dir/events.parquet")
 
-  /** Public 1 h-store location — the existence probe the resolution
-    * pickers (SteppedRollup.serve, RollupRewrite.resolveStore) use.
+  /** Public 1 h-store location — the existence probe of the serving
+    * resolver's level pick (plans/RollupServing.scala).
     */
   def storePath1h(s: SparkSession, dir: String): String =
     path(s, dir, HourResolutionSec)
@@ -230,23 +231,14 @@ object DownsampleStore {
           ChunkStore.targetPartitions(s, storePath(s, dir)), col("bucket"))
         .sortWithinPartitions("bucket", "event_type", "user_id")
         .write.mode(SaveMode.Overwrite).parquet(out)
-      writeEdgeCount(out,
-        if (edgeCount(fine) == 0L) 0L else rawEdgeCount(s, dir, resolutionSec))
+      RMS.writeMarker(out, "_edge_count",
+        if (RMS.edgeCount(fine).contains(0L)) 0L
+        else rawEdgeCount(s, dir, resolutionSec))
     }
-
-  /** [[boundaryClean]] for the 1 h level (its own `_edge_count` marker,
-    * same refuse-don't-compute posture).
-    */
-  def boundaryClean1h(s: SparkSession, dir: String): Boolean =
-    boundaryCleanAt(storePath1h(s, dir))
 
   /** The stored 1 h rollup (chain-built on first access). */
   def table1h(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensureWritten1h(s, dir))
-
-  /** [[boundaryClean]] for the 1 d level (round 15). */
-  def boundaryClean1d(s: SparkSession, dir: String): Boolean =
-    boundaryCleanAt(storePath1d(s, dir))
 
   /** The stored 1 d rollup (chain-built on first access: 300 s → 1 h →
     * 1 d, each level reading only the one below — never raw samples).
@@ -255,9 +247,8 @@ object DownsampleStore {
     s.read.parquet(ensureWritten1d(s, dir))
 
   /** Public store location for a dataset dir — the existence probe the
-    * optimizer's MV-rewrite rule (plans/RollupRewrite.scala) uses as
-    * its freshness gate (the path carries the source fingerprint:
-    * committed ⇔ fresh).
+    * serving resolver (plans/RollupServing.scala) uses as its freshness
+    * gate (the path carries the source fingerprint: committed ⇔ fresh).
     */
   def storePath(s: SparkSession, dir: String): String =
     path(s, dir, ResolutionSec)
@@ -273,7 +264,7 @@ object DownsampleStore {
           ChunkStore.targetPartitions(s, s"$dir/events.parquet"), col("bucket"))
         .sortWithinPartitions("bucket", "event_type", "user_id")
         .write.mode(SaveMode.Overwrite).parquet(out)
-      writeEdgeCount(out, rawEdgeCount(s, dir, ResolutionSec))
+      RMS.writeMarker(out, "_edge_count", rawEdgeCount(s, dir, ResolutionSec))
     }
 
   /** Count of raw samples sitting EXACTLY on a bucket boundary, as a
@@ -282,52 +273,14 @@ object DownsampleStore {
     * sample's µs timestamp is a multiple of the resolution (the one
     * point a bucket holds that its covering window excludes). The count
     * is computed once per write-once store and committed with it; the
-    * stepped MV serving (plans/SteppedRollup.scala) refuses any store
-    * whose count is nonzero.
+    * open-left serving consumers (plans/RollupServing.scala) refuse any
+    * store whose count is nonzero.
     */
   private def rawEdgeCount(s: SparkSession, dir: String,
                            resolutionSec: Long): Long =
     Tables.events(s, dir)
       .filter(expr(s"unix_micros(ts) % ${resolutionSec * 1000000L} = 0"))
       .count()
-
-  private def writeEdgeCount(out: String, cnt: Long): Unit =
-    java.nio.file.Files.write(new java.io.File(out, "_edge_count").toPath,
-      cnt.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** The `_edge_count` marker of a store, -1 when there is none. */
-  private def edgeCount(out: String): Long = {
-    val marker = new java.io.File(out, "_edge_count")
-    if (!marker.isFile) -1L
-    else new String(java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-  }
-
-  private val edgeClean =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** True iff no raw sample sits exactly on a resolution boundary —
-    * the store property that makes (t − W, t] windows exact unions of
-    * buckets. Reads the `_edge_count` marker ONLY: boundaryClean runs
-    * inside query planning (SteppedRollup.serve), so an absent store
-    * refuses instead of stalling the planner on a raw scan (ADVICE
-    * r13); the absent verdict is NOT cached.
-    */
-  def boundaryClean(s: SparkSession, dir: String): Boolean =
-    boundaryCleanAt(storePath(s, dir))
-
-  /** One definition of the marker-read posture for every chain level:
-    * absent store = refuse, verdict cached per (fingerprinted) path.
-    */
-  private def boundaryCleanAt(out: String): Boolean =
-    Option(edgeClean.get(out)).map(_.booleanValue()).getOrElse {
-      val cnt = edgeCount(out)
-      if (cnt < 0L) false
-      else {
-        edgeClean.put(out, java.lang.Boolean.valueOf(cnt == 0L))
-        cnt == 0L
-      }
-    }
 
   /** The stored rollup table (built on first access). */
   def table(s: SparkSession, dir: String): DataFrame =

@@ -123,23 +123,13 @@ object CurationStream {
     val cp = s"$root/curstream_$tag/cp"
     if (!new java.io.File(cp).isDirectory)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    // SOURCE FINGERPRINT (ADVICE r13): spark part-file names embed
-    // UUIDs, so "idempotent by name" staging is only a no-op while the
-    // corpus is the SAME corpus — a regenerated source directory would
-    // union old and new part files in the inbox and the stream would
-    // ingest both corpora. Record the source's (name, size) manifest
-    // once; a mismatched re-stage wipes inbox + checkpoint + store and
-    // rebuilds from scratch (determinism makes the rebuild exact).
-    val srcPath = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val fp = graft.Artifact.fingerprint(srcPath)
-    val fpFile = new java.io.File(s"$root/curstream_$tag", "_source_fp")
-    if (fpFile.isFile && new String(
-        java.nio.file.Files.readAllBytes(fpFile.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim != fp) {
-      Seq(in, out, cp).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-      fpFile.delete()
-    }
+    // spark part-file names embed UUIDs, so "idempotent by name"
+    // staging is only a no-op while the corpus is the SAME corpus; the
+    // source guard rebuilds from scratch otherwise (determinism makes
+    // the rebuild exact)
+    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
+    RollupMaintainStream.guardSource(s"$root/curstream_$tag",
+      graft.Artifact.fingerprint(src), in, out, cp)
     // the file-stream source watches a DIRECTORY: stage the corpus
     // into the store's inbox once (idempotent by name). The corpus may
     // be a single parquet FILE (the driver-generated testdata) or a
@@ -147,7 +137,6 @@ object CurationStream {
     // deployments) — a bare Files.copy of a directory stages an empty
     // shell and the stream reads nothing (found benching sf1, r13)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
     if (java.nio.file.Files.isDirectory(src)) {
       val parts = java.nio.file.Files.list(src)
       try parts.filter(_.getFileName.toString.endsWith(".parquet"))
@@ -161,14 +150,6 @@ object CurationStream {
       val staged = java.nio.file.Paths.get(s"$in/documents.parquet")
       if (!java.nio.file.Files.exists(staged))
         java.nio.file.Files.copy(src, staged)
-    }
-    if (!fpFile.isFile) {
-      val tmp = java.io.File.createTempFile("srcfp", ".tmp", fpFile.getParentFile)
-      java.nio.file.Files.write(tmp.toPath,
-        fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp.toPath, fpFile.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     try runOnce(s, in, out, cp)
     catch {

@@ -204,19 +204,12 @@ object RollupBackfill {
     val in = s"$base/in"
     val store = s"$base/store"
     val cp = s"$base/cp"
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val fp = graft.Artifact.fingerprint(src)
-    val fpFile = new File(base, "_source_fp")
-    if (fpFile.isFile && new String(
-        java.nio.file.Files.readAllBytes(fpFile.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim != fp) {
-      Seq(in, store, cp).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new File(p)))
-      fpFile.delete()
-    }
+    RollupMaintainStream.guardSource(base,
+      graft.Artifact.fingerprint(java.nio.file.Paths.get(s"$dir/events.parquet")),
+      in, store, cp)
     val lateCond = col("ts") >= lit("2024-01-08") &&
       col("ts") < lit("2024-01-09") && pmod(col("user_id"), lit(5)) === 2
-    if (!fpFile.isFile || readMarker(store, "_backfilled").isEmpty) {
+    if (readMarker(store, "_backfilled").isEmpty) {
       val ev = graft.Tables.events(s, dir)
       // stage the ON-TIME corpus (everything but the late slice)
       val stage = s"$base/stage_ontime"
@@ -228,10 +221,6 @@ object RollupBackfill {
           if (!java.nio.file.Files.exists(dst))
             java.nio.file.Files.copy(p.toPath, dst)
         }
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      if (!fpFile.isFile)
-        java.nio.file.Files.write(fpFile.toPath,
-          fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       RollupMaintainStream.runOnce(s, in, store, cp, dir)
       RollupMaintainStream.runOnce(s, in, store, cp, dir) // drain
       backfill(s, store, ev, ev.filter(lateCond))

@@ -191,27 +191,30 @@ object RollupMaintainStream {
   def horizonSec(storeDir: String): Option[Long] =
     readMarker(storeDir, "_watermark")
 
-  /** Count of flushed samples sitting exactly on a bucket boundary —
-    * the stream store's sibling of DownsampleStore's `_edge_count`
-    * (the stepped serving refuses a nonzero store). None until the
-    * first maintenance pass publishes it.
+  /** The `_edge_count` marker of a rollup store dir — a stream store or
+    * one batch chain level: the count of samples sitting exactly on a
+    * bucket boundary (open-left serving refuses a nonzero count). None
+    * until a maintenance pass or the level's build writes it.
     */
   def edgeCount(storeDir: String): Option[Long] =
     readMarker(storeDir, "_edge_count")
 
-  private[graft] def readMarker(storeDir: String, name: String): Option[Long] = {
+  private[graft] def readMarker(storeDir: String, name: String): Option[Long] =
+    readText(storeDir, name).map(_.toLong)
+
+  private def readText(storeDir: String, name: String): Option[String] = {
     val marker = new java.io.File(storeDir, name)
     if (!marker.isFile) None
     else Some(new String(java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
+      java.nio.charset.StandardCharsets.UTF_8).trim)
   }
 
-  private[streaming] def writeMarker(storeDir: String, name: String,
-                          value: Long): Unit =
+  private[graft] def writeMarker(storeDir: String, name: String,
+                                 value: Long): Unit =
     writeMarker(storeDir, name, value.toString)
 
-  private[streaming] def writeMarker(storeDir: String, name: String,
-                          value: String): Unit = {
+  private[graft] def writeMarker(storeDir: String, name: String,
+                                 value: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(storeDir))
     val tmp = java.io.File.createTempFile("mrk", ".tmp",
       new java.io.File(storeDir))
@@ -228,34 +231,22 @@ object RollupMaintainStream {
     * serve a DIFFERENT dataset's queries (review r13: the store must
     * carry its source identity, not trust the conf blindly).
     */
-  def sourceDir(storeDir: String): Option[String] = {
-    val marker = new java.io.File(storeDir, "_source_dir")
-    if (!marker.isFile) None
-    else Some(new String(java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim)
-  }
+  def sourceDir(storeDir: String): Option[String] =
+    readText(storeDir, "_source_dir")
 
   /** True iff the store's endpoint picks were chosen under the current
     * struct (us, event_id) order key — serving refuses anything else.
     */
-  def keyRevOk(storeDir: String): Boolean = {
-    val marker = new java.io.File(storeDir, "_key_rev")
-    marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim == "struct1"
-  }
+  def keyRevOk(storeDir: String): Boolean =
+    readText(storeDir, "_key_rev").contains("struct1")
 
   /** True iff the store's parts carry the c1 counter partial (inc_dec)
     * — the stepped front-end's gate for serving rate/increase from the
     * stream store. Pre-c1 stores keep serving the lossless verbs (the
     * ServingCols projection never reads inc_dec) but refuse counters.
     */
-  def counterRevOk(storeDir: String): Boolean = {
-    val marker = new java.io.File(storeDir, "_schema_rev")
-    marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim == "c1"
-  }
+  def counterRevOk(storeDir: String): Boolean =
+    readText(storeDir, "_schema_rev").contains("c1")
 
   /** One AvailableNow maintenance pass: new event files under `inDir`
     * (a landing dir receiving `sourceDir`'s events) advance the rollup
@@ -527,6 +518,21 @@ object RollupMaintainStream {
       Option(f.listFiles()).getOrElse(Array.empty).exists(p =>
         p.isFile && p.getName.endsWith(".parquet") && p.length() > 0L)
 
+  /** The source guard of a stream-maintained demo store at `base`:
+    * unless its `_source_fp` marker equals `fp` (the corpus'
+    * graft.Artifact fingerprint), the store's `dirs` (inbox, output,
+    * checkpoint) are wiped and `fp` is recorded, so a regenerated corpus
+    * rebuilds from scratch instead of unioning its part files with the
+    * old corpus' in the inbox.
+    */
+  private[streaming] def guardSource(base: String, fp: String,
+                                     dirs: String*): Unit =
+    if (!readText(base, "_source_fp").contains(fp)) {
+      dirs.foreach(p =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+      writeMarker(base, "_source_fp", fp)
+    }
+
   /** A stream-maintained store over `dir`'s events table, staged and
     * maintained under the session's store root — the driver-entry form
     * (round 15; VERDICT r14 #3): deterministic (the store's rows are a
@@ -558,16 +564,8 @@ object RollupMaintainStream {
     val store = s"$base/store"
     val cp = s"$base/cp"
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val fp = graft.Artifact.fingerprint(src)
-    val fpFile = new java.io.File(base, "_source_fp")
-    if (fpFile.isFile && new String(
-        java.nio.file.Files.readAllBytes(fpFile.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim != fp) {
-      Seq(in, store, cp).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-      fpFile.delete()
-    }
-    if (!fpFile.isFile || horizonSec(store).isEmpty) {
+    guardSource(base, graft.Artifact.fingerprint(src), in, store, cp)
+    if (horizonSec(store).isEmpty) {
       // stage the corpus into the inbox (idempotent by name; a corpus
       // may be one parquet FILE or a spark-written DIRECTORY of parts)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -582,10 +580,6 @@ object RollupMaintainStream {
           .forEach(p => stageOne(p, p.getFileName.toString))
         finally parts.close()
       } else stageOne(src, "events.parquet")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-      if (!fpFile.isFile)
-        java.nio.file.Files.write(fpFile.toPath,
-          fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       runOnce(s, in, store, cp, dir)
       runOnce(s, in, store, cp, dir) // drain pass: flush + advance
     }

@@ -38,36 +38,56 @@ class CancellationSpec extends AnyFunSuite {
       finally spark.sparkContext.clearJobGroup()
     })
     t.start()
-    // wait until a job of the group is actually RUNNING (planning and
-    // codegen of the 3-way cross join take a while; cancelling before
-    // submission is a no-op the DAGScheduler warns about)
     val tracker = spark.sparkContext.statusTracker
-    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-    while (tracker.getJobIdsForGroup(group).isEmpty &&
-           System.nanoTime() < deadline && t.isAlive)
-      Thread.sleep(100)
-    assert(tracker.getJobIdsForGroup(group).nonEmpty, "job never started")
-    val t0 = System.nanoTime()
-    // AndFutureJobs matters: a multi-job action (AQE stages, broadcast
-    // sub-jobs) re-submits under the same group after the first kill —
-    // plain cancelJobGroup only hits jobs active at call time, and the
-    // NEXT stage of the 10⁹-row count then runs to completion (the
-    // exact flake this spec shipped with)
-    spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-    t.join(120000)
-    assert(!t.isAlive, "cancelled query must terminate")
-    assert(!finished, "the O(n²) count must not have completed")
-    assert(err != null, "the caller must observe the cancellation")
-    val secs = (System.nanoTime() - t0) / 1e9
-    // the bound measures interruptOnCancel responsiveness, not box
-    // load: under the full parallel suite all 32 cores are shared AND
-    // the virtualized host has multi-second scheduling stalls, so it
-    // is deliberately generous (measured flakes at 45 s under suite
-    // parallelism; quiet-box latency is <2 s) — promptness here means
-    // "not until the 10⁹-row job drains", which takes minutes
-    assert(secs < 90.0, s"cancellation must be prompt, took $secs s")
-    // the session is not poisoned: a normal query still runs
-    assert(Tables.events(spark, sf).limit(5).count() === 5L)
+    // what the group still runs, named in the failure message so a
+    // flake shows its cause
+    def stillActive: String = {
+      val jobs = tracker.getJobIdsForGroup(group).flatMap(tracker.getJobInfo)
+        .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+      val stages = tracker.getActiveStageIds.toSet
+      s"group $group still runs jobs [${jobs.map(_.jobId).mkString(",")}], " +
+        s"stages [${jobs.flatMap(_.stageIds).filter(stages).mkString(",")}]"
+    }
+    try {
+      // wait until a job of the group is actually RUNNING (planning and
+      // codegen of the 3-way cross join take a while; cancelling before
+      // submission is a no-op the DAGScheduler warns about)
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (tracker.getJobIdsForGroup(group).isEmpty &&
+             System.nanoTime() < deadline && t.isAlive)
+        Thread.sleep(100)
+      assert(tracker.getJobIdsForGroup(group).nonEmpty, "job never started")
+      val t0 = System.nanoTime()
+      // AndFutureJobs matters: a multi-job action (AQE stages, broadcast
+      // sub-jobs) re-submits under the same group after the first kill —
+      // plain cancelJobGroup only hits jobs active at call time, and the
+      // NEXT stage of the 10⁹-row count then runs to completion (the
+      // exact flake this spec shipped with)
+      spark.sparkContext.cancelJobGroupAndFutureJobs(group)
+      t.join(120000)
+      assert(!t.isAlive, s"cancelled query must terminate; $stillActive")
+      assert(!finished, "the O(n²) count must not have completed")
+      assert(err != null, "the caller must observe the cancellation")
+      val secs = (System.nanoTime() - t0) / 1e9
+      // the bound measures interruptOnCancel responsiveness, not box
+      // load: under the full parallel suite all 32 cores are shared AND
+      // the virtualized host has multi-second scheduling stalls, so it
+      // is deliberately generous (measured flakes at 45 s under suite
+      // parallelism; quiet-box latency is <2 s) — promptness here means
+      // "not until the 10⁹-row job drains", which takes minutes
+      assert(secs < 90.0, s"cancellation must be prompt, took $secs s")
+      // the session is not poisoned: a normal query still runs
+      assert(Tables.events(spark, sf).limit(5).count() === 5L)
+    } finally {
+      // a failed assertion must not leave the 10⁹-row job running into
+      // the suites that follow (they share the context, so only this
+      // group is cancelled)
+      if (t.isAlive) {
+        spark.sparkContext.cancelJobGroupAndFutureJobs(group)
+        t.interrupt()
+        t.join(60000)
+      }
+    }
   }
 
   /** Cancelling a query reaches every job it starts, including the

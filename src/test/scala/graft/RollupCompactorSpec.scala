@@ -10,27 +10,20 @@ import graft.sources.DownsampleStore
 import graft.streaming.{RollupCompactor, RollupMaintainStream => RMS}
 import SparkFixture.spark
 
-/** Compaction + retention for the live rollup store chain (round 17;
-  * VERDICT r16 #1 — the reference's Compact() role applied to the
-  * stream store): part/increment dirs consolidate behind marker-gated
-  * swaps with serving bit-equal before/after, the file count stays
-  * bounded under repeated maintenance, and retention drops only
-  * fold-covered raw buckets — queries needing them either serve from
-  * the fold bands or fall back to the raw events scan, never partial.
-  */
-class RollupCompactorSpec extends AnyFunSuite {
+/** The waved stream-store fixture, shared with RollupServingGateSpec. */
+object RollupCompactorSpec {
 
-  private val dir01 = "/root/testdata/sf0.01"
+  val dir01 = "/root/testdata/sf0.01"
 
-  private def freshDirs(tag: String): (String, String, String) = {
+  def freshDirs(tag: String): (String, String, String) = {
     val base = SparkFixture.tmp(s"rollup_compact_$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     Files.createDirectories(Paths.get(s"$base/in"))
     (s"$base/in", s"$base/store", s"$base/cp")
   }
 
-  private def land(in: String, wave: org.apache.spark.sql.DataFrame,
-                   tag: String): Unit = {
+  def land(in: String, wave: org.apache.spark.sql.DataFrame,
+           tag: String): Unit = {
     val stage = s"${in}_stage_$tag"
     wave.coalesce(1).write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
@@ -41,13 +34,13 @@ class RollupCompactorSpec extends AnyFunSuite {
   // waves cut just past a midnight so each pass's watermark lands in
   // [00:00, 01:00) and the 1h fold closes at a DAY-ALIGNED hour — the
   // chunk cut the log-structured consolidation keys on
-  private val cuts = Seq("2024-01-05T01:30:00", "2024-01-09T01:30:00",
+  val cuts = Seq("2024-01-05T01:30:00", "2024-01-09T01:30:00",
     "2024-01-13T01:30:00", "2024-01-17T01:30:00", "2024-01-21T01:30:00")
 
   // lands waves 0..4 (everything before cuts.last stays in the store;
   // the slice past cuts.last is left for callers that need fresh
   // arrivals AFTER a compaction)
-  private def buildWaved(tag: String): (String, String, String) = {
+  def buildWaved(tag: String): (String, String, String) = {
     val (in, store, cp) = freshDirs(tag)
     val ev = spark.read.parquet(s"$dir01/events.parquet")
     val bounds = cuts.map(java.time.LocalDateTime.parse)
@@ -61,6 +54,18 @@ class RollupCompactorSpec extends AnyFunSuite {
     RMS.runOnce(spark, in, store, cp, dir01) // drain
     (in, store, cp)
   }
+}
+
+/** Compaction + retention for the live rollup store chain (round 17;
+  * VERDICT r16 #1 — the reference's Compact() role applied to the
+  * stream store): part/increment dirs consolidate behind marker-gated
+  * swaps with serving bit-equal before/after, the file count stays
+  * bounded under repeated maintenance, and retention drops only
+  * fold-covered raw buckets — queries needing them either serve from
+  * the fold bands or fall back to the raw events scan, never partial.
+  */
+class RollupCompactorSpec extends AnyFunSuite {
+  import RollupCompactorSpec._
 
   private def batchDirCount(store: String): Int =
     Option(new java.io.File(store, "parts").listFiles())

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reused — memos go through [[Memo]]), and NUL bytes (they make grep
   * treat a source as binary; write `\u0000` instead). Main and test
   * sources also carry no absolute checkout path: stores live under
-  * `spark.graft.store.root`, and specs use [[SparkFixture.tmp]].
+  * `spark.graft.store.root`, and specs use [[SparkFixture.tmp]]. Which
+  * rollup store serves a query is decided in plans/RollupServing.scala
+  * alone.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -40,6 +42,20 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("no main source contains a NUL byte") {
     val hits = sources.filter(p => Files.readAllBytes(p).contains(0.toByte))
     assert(hits.isEmpty, s"write NUL as the \\u0000 escape: $hits")
+  }
+
+  test("plans/ and operators/ resolve rollup stores only through RollupServing") {
+    val decision = Seq("""conf\.get\([^)]*StreamStoreConf""", """foldedLevel\(""",
+      """retainFloor\(""", """storePath1[dh]\(""").map(_.r)
+    val hits = for {
+      p <- sources
+      rel = p.toString
+      if rel.contains("graft/plans/") || rel.contains("graft/operators/")
+      if !rel.endsWith("graft/plans/RollupServing.scala")
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      re <- decision if re.findFirstIn(text).isDefined
+    } yield s"$p: $re"
+    assert(hits.isEmpty, s"decide rollup serving in plans/RollupServing.scala: $hits")
   }
 
   test("no main or test source hardcodes the checkout path") {

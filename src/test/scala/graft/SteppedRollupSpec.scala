@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Promql
 import graft.operators.Promql.EvalSpec
 import graft.sources.DownsampleStore
+import graft.plans.RollupServing
 import SparkFixture.{sf, spark}
 
 /** Stepped PromQL range queries served from the downsample rollup
@@ -151,9 +152,9 @@ class SteppedRollupSpec extends AnyFunSuite {
     base.unionByName(edge).write.parquet(s"$root/events.parquet")
     val s2 = optIn()
     DownsampleStore.table(s2, root).count() // build store + edge marker
-    assert(!DownsampleStore.boundaryClean(s2, root),
+    assert(!RollupServing.boundaryClean(DownsampleStore.storePath(s2, root)),
       "the staged store must be boundary-dirty")
-    assert(DownsampleStore.boundaryClean(s2, sf),
+    assert(RollupServing.boundaryClean(DownsampleStore.storePath(s2, sf)),
       "the fixture store must be boundary-clean")
     val df = Promql.queryAt(s2, root, "sum_over_time(click[1h])", spec)
     assertRaw(df, "boundary-dirty store")
