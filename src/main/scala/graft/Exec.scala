@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Paths
 import java.util.concurrent.{ConcurrentHashMap, ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -49,10 +50,13 @@ object Par {
 }
 
 /** The one session-scoped memo: a value built once per (session, key).
-  * Keys are value-equal: the memo's name, or a tuple led by it, e.g.
-  * `("Dedup.collapsed", dir)`. `spark.newSession()` gets its own
-  * entries, and a context's entries are dropped when its application
-  * ends, so a new session is never served a dead checkpointed frame.
+  * A value derived from a table is keyed on that table through [[over]]
+  * and rebuilt when the table's files change; plain keys are for values
+  * no source derives (a per-session register, or a decode keyed on an
+  * [[Artifact]] path, which already holds its source's fingerprint).
+  * `spark.newSession()` gets its own entries, and a context's entries
+  * are dropped when its application ends, so a new session is never
+  * served a dead checkpointed frame.
   *
   * Builds run outside the map's locking: builds nest (verified pairs
   * read candidate pairs) and run concurrently from [[Par]] threads,
@@ -62,12 +66,25 @@ object Par {
   */
 object Memo {
 
-  private final class Cell(build: () => Any) { lazy val value: Any = build() }
+  private final class Cell(val fp: String, build: () => Any) { lazy val value: Any = build() }
 
   private val cells = new ConcurrentHashMap[(SparkSession, Any), Cell]()
   private val endHooks = new ConcurrentHashMap[SparkContext, SparkListener]()
 
-  def apply[V](s: SparkSession, key: Any)(build: => V): V = {
+  def apply[V](s: SparkSession, key: Any)(build: => V): V = get(s, key, null)(build)
+
+  /** A value built from the table at `source` (its file or directory),
+    * once per (session, tag, source, params) and again whenever the
+    * table's [[Artifact.fingerprint]] differs from the one the entry was
+    * built at: the new value replaces the entry, so a table rewritten in
+    * place is never answered from a frame over its old files (Spark's
+    * cache matches plans by path and would be), and the superseded
+    * value, a checkpoint's blocks included, becomes unreachable.
+    */
+  def over[V](s: SparkSession, tag: String, source: String, params: Any*)(build: => V): V =
+    get(s, (tag, source, params), Artifact.fingerprint(Paths.get(source)))(build)
+
+  private def get[V](s: SparkSession, key: Any, fp: String)(build: => V): V = {
     endHooks.computeIfAbsent(s.sparkContext, sc => {
       val hook = new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
@@ -79,11 +96,15 @@ object Memo {
       hook
     })
     val k = (s, key)
-    val cell = cells.computeIfAbsent(k, _ => new Cell(() => build))
+    val cell = cells.compute(k, (_, old) =>
+      if (old != null && old.fp == fp) old else new Cell(fp, () => build))
     try cell.value.asInstanceOf[V]
     catch { case e: Throwable => cells.remove(k, cell); throw e }
   }
 
   private[graft] def endHook(sc: SparkContext): Option[SparkListener] =
     Option(endHooks.get(sc))
+
+  private[graft] def entries(s: SparkSession): Long =
+    cells.keySet.stream.filter(_._1 eq s).count()
 }

@@ -159,6 +159,13 @@ object Tables {
     * repartition, so the spread would shuffle a handful of rows for
     * nothing but an extra stage.
     */
+  /** The file [[embeddings]] reads for `d`. The clustered corpus is
+    * derived from the same file, so a store or memo over embeddings keys
+    * on this file plus [[clustered]].
+    */
+  def embeddingsFile(d: String): String = s"${d.stripSuffix(ClusteredTag)}/embeddings.parquet"
+  def clustered(d: String): Boolean = d.endsWith(ClusteredTag)
+
   def embeddingsSpread(s: SparkSession, d: String): DataFrame =
     spreadSmallScan(s, embeddings(s, d), "vec_id")
 

@@ -28,10 +28,10 @@ import graft.{Memo, Tables}
   * Scale shape: the edge list is built by the fact-table joins
   * (lineitem⋈orders co-partitioned on orderkey, then the customer /
   * supplier dimension joins) and collapsed to DISTINCT (src, dst) —
-  * vertex²-bounded, cached once. Each iteration is one join of the
-  * rank frame (|V| rows) into the cached edge frame + one partial-agg
-  * shuffle on dst. With |V| ≪ |E| the rank side broadcasts (here the
-  * optimizer does it automatically); at web scale the same loop
+  * vertex²-bounded, checkpointed once. Each iteration is one join of
+  * the rank frame (|V| rows) into the checkpointed edge frame + one
+  * partial-agg shuffle on dst. With |V| ≪ |E| the rank side
+  * broadcasts (hinted); at web scale the same loop
   * co-partitions edges by src once and shuffles only the |V|-sized
   * rank frame per iteration — never the edge list. Lineage is cut per
   * iteration with a localCheckpoint of the |V|-row rank frame (the
@@ -63,13 +63,12 @@ object Graph {
     require(iters >= 1, "iters must be >= 1")
     val edges = tradeEdges(s, dir)
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // (src, dst, outdeg) — reused every iteration, cache once.
-    // Measured (optimization r18): both a dst-co-partitioned eager
-    // checkpoint and a plain eager checkpoint of e ran FLAT on time
-    // with ~1.5x the stage-jobs (56 -> 82) — at dimension-bounded V
-    // the iteration cost is broadcast/scheduler latency the exchange
-    // reuse cannot touch. Kept as cache.
-    val e = edges.join(outdeg, "src").cache()
+    // (src, dst, outdeg): every iteration is its own query and reads
+    // it. Measured (optimization r18): an eager checkpoint of e ran
+    // FLAT on time with ~1.5x the stage-jobs (56 -> 82) — at
+    // dimension-bounded V the iteration cost is broadcast/scheduler
+    // latency; a dst-co-partitioned checkpoint was no better.
+    val e = edges.join(outdeg, "src").localCheckpoint()
     val nations = Tables.nation(s, dir).select(col("n_nationkey").as("node"),
       col("n_name"))
     // |V| is dimension-table-bounded (25 nations) — a driver-side count
@@ -78,7 +77,9 @@ object Graph {
     val base = (15L * Scale) / (100L * nV)
     var ranks = nations.select(col("node"), lit(Scale / nV).as("r"))
     for (_ <- 1 to iters) {
-      val contrib = e.join(ranks, e("src") === ranks("node"))
+      // hinted: a checkpoint keeps the optimizer's size estimate (a
+      // product over the fact joins), so |V| rows look too big to broadcast
+      val contrib = e.join(broadcast(ranks), e("src") === ranks("node"))
         .select(col("dst"), expr("r div outdeg").as("c"))
         .groupBy("dst").agg(sum("c").as("contrib"))
       ranks = nations
@@ -141,7 +142,7 @@ object Graph {
     */
   def supportedEdges(s: SparkSession, dir: String,
                      minSupport: Int = ComponentsSupport): DataFrame =
-    Memo(s, ("Graph.supportedEdges", dir, minSupport))(
+    Memo.over(s, "Graph.supportedEdges", s"$dir/lineitem.parquet", minSupport)(
       supportedEdgesUncached(s, dir, minSupport).localCheckpoint())
 
   private def supportedEdgesUncached(s: SparkSession, dir: String,
@@ -200,15 +201,14 @@ object Graph {
     * closers (|triangles| rows, ≪ wedges). No windows anywhere.
     */
   def triangleCount(s: SparkSession, dir: String): DataFrame = {
-    // cache: the edge list feeds the degree pass AND the orientation
-    // join — uncached it re-runs the lineitem self-join+distinct twice
-    val e = basketEdges(s, dir).cache()
-    // V-row degree table: cache (BOTH orientation joins read it) and
-    // broadcast (V ≪ E; a shuffle join would move the edge list twice)
+    // the edge list feeds the degree pass AND the orientation join; the
+    // executed plan reads its DISTINCT exchange once (ReusedExchange)
+    val e = basketEdges(s, dir)
+    // V-row degree table, broadcast (V ≪ E; a shuffle join would move
+    // the edge list twice); both orientation joins reuse the broadcast
     val deg = e.select(col("x").as("node"))
       .union(e.select(col("y").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-      .cache()
     // orient by (deg, node): u -> v iff (deg_u, u) < (deg_v, v)
     val withDeg = e
       .join(broadcast(deg.withColumnRenamed("node", "x")
@@ -221,14 +221,13 @@ object Graph {
         .otherwise(struct(col("y").as("u"), col("x").as("v")))
         .as("o"))
       .select(col("o.u").as("u"), col("o.v").as("v"))
-      .cache()
-    // cache: both the u-side and v-side joins read the adjacency table
-    // (at web scale these are shuffle joins co-partitioned on the node
-    // key — the V-row table cannot broadcast there; here Spark picks
-    // broadcast on its own, which is fine at dimension-bounded V)
+      .localCheckpoint() // read by the adjacency pass and both closer legs
+    // both the u-side and v-side joins read the adjacency table through
+    // one exchange (at web scale these are shuffle joins co-partitioned
+    // on the node key — the V-row table cannot broadcast there; here
+    // Spark picks broadcast on its own, fine at dimension-bounded V)
     val adj = oriented.groupBy(col("u").as("node"))
       .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-      .cache()
     val closers = oriented
       .join(adj.select(col("node").as("u"), col("nbrs").as("nu")), Seq("u"))
       .join(adj.select(col("node").as("v"), col("nbrs").as("nv")), Seq("v"))
@@ -271,7 +270,7 @@ object Graph {
       .select(least(col("c_nationkey"), col("s_nationkey")).as("a"),
         greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("w"))
-      .cache()
+      .localCheckpoint() // counted here, then read by the cut and the filter
     val n = und.count()
     val k = math.ceil(0.75 * n).toLong
     if (k == 0L) und.select(col("a"), col("b"))
@@ -320,7 +319,7 @@ object Graph {
     val keep = strongTradeEdges(s, dir)
     val adj = keep.select(col("a").as("src"), col("b").as("t"))
       .union(keep.select(col("b").as("src"), col("a").as("t")))
-      .cache()
+      .localCheckpoint() // every round is its own query and reads it
     val nations = Tables.nation(s, dir)
       .select(col("n_nationkey").as("node"), col("n_name"))
     val maxKey = nations.agg(max("node")).head().getInt(0)
@@ -330,11 +329,11 @@ object Graph {
       expr("shiftleft(1L, node)").as("mask"), lit(0L).as("h"))
     for (r <- 1 to radius) {
       val nbr = cur.select(col("node").as("src"), col("mask"))
-        .join(adj, "src")
+        .join(broadcast(adj), "src")
         .select(col("t").as("node"), col("mask"))
       val merged = cur.select(col("node"), col("mask")).union(nbr)
         .groupBy("node").agg(expr("bit_or(mask)").as("nmask"))
-      cur = cur.join(merged, "node")
+      cur = cur.join(broadcast(merged), "node")
         .select(col("node"), col("nmask").as("mask"),
           (col("h") +
             (bit_count(col("nmask")) - bit_count(col("mask"))).cast("long") *
@@ -352,13 +351,13 @@ object Graph {
     val keep = strongTradeEdges(s, dir)
     val adj = keep.select(col("a").as("src"), col("b").as("t"))
       .union(keep.select(col("b").as("src"), col("a").as("t")))
-      .cache()
+      .localCheckpoint() // every round is its own query and reads it
     val nations = Tables.nation(s, dir)
       .select(col("n_nationkey").as("node"), col("n_name"))
     var dist = nations.select(col("node").as("o"), col("node").as("nd"),
       lit(0).as("d"))
     for (_ <- 1 to radius) {
-      val relaxed = dist.join(adj, dist("nd") === adj("src"))
+      val relaxed = dist.join(broadcast(adj), dist("nd") === adj("src"))
         .select(col("o"), col("t").as("nd"), (col("d") + lit(1)).as("d"))
       dist = dist.union(relaxed)
         .groupBy("o", "nd").agg(min("d").as("d"))

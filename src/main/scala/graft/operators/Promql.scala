@@ -1846,16 +1846,17 @@ object Promql {
     def maxK: Long = (endSec - startSec) / stepSec
   }
 
-  /** Explode each sample to the aligned steps whose window
-    * `(t − windowSec, t]` contains it. The explode factor is bounded by
-    * `windowSec / stepSec` (overlapping windows are inherently
-    * duplicating); each output row carries its serving `step`. Deltas
-    * stay < 2⁵³ so the double division is exact enough for the integer
-    * bounds.
+  /** Explode each row to the aligned steps whose window
+    * `(t − windowSec, t]` contains its time `us` (epoch µs: a sample's
+    * `ts` by default, or a subquery's inner step). The explode factor
+    * is bounded by `windowSec / stepSec` (overlapping windows are
+    * inherently duplicating); each output row carries its serving
+    * `step`. Deltas stay < 2⁵³ so the double division is exact enough
+    * for the integer bounds. The one raw covering law: the stepped
+    * evaluator, its subqueries and the rule-group pass explode here.
     */
-  private def coveringSteps(samples: DataFrame, spec: EvalSpec,
-                            windowSec: Long): DataFrame = {
-    val us = unix_micros(col("ts"))
+  private[graft] def coveringSteps(df: DataFrame, spec: EvalSpec, windowSec: Long,
+                                   us: Column = unix_micros(col("ts"))): DataFrame = {
     val aUs = lit(spec.startSec * 1000000L)
     val sUs = spec.stepSec * 1000000L
     val wUs = windowSec * 1000000L
@@ -1869,25 +1870,6 @@ object Promql {
     // silently replace) the derived payload label k on a
     // `click{k=...}` stepped query — a real stepped-evaluator bug
     // found writing the round-13 rollup-serving spec
-    samples
-      .withColumn("__cs_kmin", kMin).withColumn("__cs_kmax", kMax)
-      .filter(col("__cs_kmin") <= col("__cs_kmax"))
-      .withColumn("__cs_k", explode(sequence(col("__cs_kmin"), col("__cs_kmax"))))
-      .withColumn("step", col("__cs_k") * spec.stepSec + spec.startSec)
-      .drop("__cs_kmin", "__cs_kmax", "__cs_k")
-  }
-
-  /** Like [[coveringSteps]], but for an already-evaluated vector whose
-    * time axis is the whole-second column `tSec` (a subquery's inner
-    * steps): explode each row to the spec steps whose (t − W, t] window
-    * contains it.
-    */
-  private def coveringStepsOf(df: DataFrame, spec: EvalSpec, windowSec: Long,
-                              tSec: Column): DataFrame = {
-    val delta = (tSec - spec.startSec).cast("double")
-    val kMin = greatest(lit(0L), ceil(delta / spec.stepSec).cast("long"))
-    val kMax = least(lit(spec.maxK),
-      (ceil((delta + windowSec) / spec.stepSec) - 1).cast("long"))
     df.withColumn("__cs_kmin", kMin).withColumn("__cs_kmax", kMax)
       .filter(col("__cs_kmin") <= col("__cs_kmax"))
       .withColumn("__cs_k", explode(sequence(col("__cs_kmin"), col("__cs_kmax"))))
@@ -1990,7 +1972,7 @@ object Promql {
         // if they were samples: ts = the inner step, tiebreak = istep
         // (unique per series per window)
         val innerLabels = inner.columns.filter(c => c != "istep" && c != "value").toSeq
-        val prepped = coveringStepsOf(inner, spec, rangeSec, col("istep"))
+        val prepped = coveringSteps(inner, spec, rangeSec, col("istep") * 1000000L)
           .withColumn("ts", timestamp_seconds(col("istep")))
           .withColumn("event_id", col("istep"))
           .drop("istep")

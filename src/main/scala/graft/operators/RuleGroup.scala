@@ -175,8 +175,6 @@ object RuleGroup {
       : (Map[String, DataFrame], DataFrame, Set[String]) = {
     val rules = rulesIdx.map(_._1)
     val wMax = rules.map(_.windowSec).max
-    val sUs = spec.stepSec * 1000000L
-    val aUs = spec.startSec * 1000000L
     // range-pruned, metric-pruned single scan (both pushed); payload
     // labels in the grain materialize with the evaluator's projections
     val ev = grain.filterNot(Grain.contains).foldLeft(
@@ -187,20 +185,8 @@ object RuleGroup {
             .isin(rules.flatMap(_.metrics).distinct: _*))
           .withColumn("__us", unix_micros(col("ts")))
       )((d, l) => d.withColumn(l, Promql.labelProjection(l)))
-    // covering steps for the WIDEST window: step k covers sample m iff
-    // aUs + k·sUs ∈ [m, m + Wmax·1e6); deltas stay far below 2^53 so
-    // the double ceil/floor is exact (the stepped evaluator's argument)
-    val dOff = (col("__us") - lit(aUs)).cast("double")
-    val kMin = greatest(lit(0L),
-      ceil(dOff / lit(sUs.toDouble)).cast("long"))
-    val kMax = least(lit(spec.maxK),
-      floor((dOff + lit(wMax * 1000000.0 - 1.0)) / lit(sUs.toDouble))
-        .cast("long"))
-    val exploded0 = ev
-      .withColumn("__kmin", kMin).withColumn("__kmax", kMax)
-      .filter(col("__kmin") <= col("__kmax"))
-      .withColumn("__k", explode(sequence(col("__kmin"), col("__kmax"))))
-      .withColumn("step", col("__k") * spec.stepSec + spec.startSec)
+    // covering steps for the WIDEST window
+    val exploded0 = Promql.coveringSteps(ev, spec, wMax, col("__us"))
       .withColumn("__delta", col("step") * lit(1000000L) - col("__us"))
     // counter verbs need the previous in-window sample: ONE lag pass
     // over the (step, series) partition covers every counter rule —
@@ -275,7 +261,7 @@ object RuleGroup {
     // frame never enters the CacheManager registry, and its blocks
     // are GC-cleaned without the session-cache bookkeeping the
     // persist form needed.
-    val shared = pre.localCheckpoint(true)
+    val shared = pre.localCheckpoint()
     (fanOut(s, spec, shared, rulesIdx, grain), shared,
       scanPathsOf(pre.queryExecution))
   }
@@ -505,7 +491,7 @@ object RuleGroup {
       else d.withColumn(s"__i$i", when(col(s"__rn$i").isNotNull,
         coalesce(col(s"__ri$i"), zero) + coalesce(col(s"__rb$i"), zero)))
     }
-    val shared = withCounters.localCheckpoint(true) // see evaluatePass
+    val shared = withCounters.localCheckpoint() // see evaluatePass
     Some((fanOut(s, spec, shared, rulesIdx, Grain), shared,
       scanPathsOf(withCounters.queryExecution)))
   }

@@ -83,7 +83,7 @@ object Bpe {
     */
   def learnedMerges(s: SparkSession, dir: String,
                     merges: Int = Merges): Seq[Merge] =
-    Memo(s, ("Bpe.learnedMerges", dir, merges)) {
+    Memo.over(s, "Bpe.learnedMerges", s"$dir/documents.parquet", merges) {
       // Adaptive trainer split, the standard BPE production shape: the
       // corpus reduces ONCE to (word, freq) — the only corpus-sized
       // pass — then the merge loop runs wherever the VOCABULARY fits.

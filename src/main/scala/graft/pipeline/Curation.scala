@@ -772,7 +772,7 @@ object Curation {
     * gram pass per entry.
     */
   def dsirWeights(s: SparkSession, dir: String): DataFrame =
-    Memo(s, ("Curation.dsirWeights", dir))(
+    Memo.over(s, "Curation.dsirWeights", s"$dir/documents.parquet")(
       dsirWeightsUncached(s, dir).localCheckpoint())
 
   private def dsirWeightsUncached(s: SparkSession, dir: String): DataFrame = {

@@ -66,10 +66,11 @@ object Dedup {
     * the memo every OPERATOR re-runs the groupBy (measured: the
     * 1.3-1.6x base-scale bench flags vs baseline). A real pipeline
     * writes its exact-dedup table once and reads it everywhere; this is
-    * the in-JVM equivalent, held until the application ends.
+    * the in-JVM equivalent.
     */
   private[pipeline] def collapsed(s: SparkSession, dir: String): DataFrame =
-    Memo(s, ("Dedup.collapsed", dir))(contents(s, dir).localCheckpoint(true))
+    Memo.over(s, "Dedup.collapsed", s"$dir/documents.parquet")(
+      contents(s, dir).localCheckpoint())
   // NOT spread at the store (measured, optimization r18): repartitioning
   // the checkpointed store to defaultParallelism made the heavy gram
   // chains parallel but taxed the store's many SMALL consumers
@@ -153,7 +154,7 @@ object Dedup {
     */
   private def contentCandidates(s: SparkSession, dir: String, c: DataFrame,
                                 numBands: Int, rowsPerBand: Int): (DataFrame, DataFrame) =
-    Memo(s, ("Dedup.candidates", dir, numBands, rowsPerBand)) {
+    Memo.over(s, "Dedup.candidates", s"$dir/documents.parquet", numBands, rowsPerBand) {
       val ex = bands(c, numBands, rowsPerBand)
       val pairs = ex.as("l").join(ex.as("r"),
           col("l.band") === col("r.band") &&
@@ -161,8 +162,8 @@ object Dedup {
             col("l.cid") < col("r.cid"))
         .select(col("l.cid").as("c1"), col("r.cid").as("c2"))
         .distinct()
-      (pairs.localCheckpoint(true),
-        ex.select("cid").distinct().localCheckpoint(true))
+      (pairs.localCheckpoint(),
+        ex.select("cid").distinct().localCheckpoint())
     }
 
   /** LSH candidate pairs: docs sharing any band. Collapse-first: the
@@ -286,7 +287,7 @@ object Dedup {
     */
   private def verifiedContentPairs(s: SparkSession, dir: String,
                                    c: DataFrame): (DataFrame, DataFrame) =
-    Memo(s, ("Dedup.verified", dir)) {
+    Memo.over(s, "Dedup.verified", s"$dir/documents.parquet") {
       val sh = contentShingles(c)
       val counts = sh.groupBy("cid").agg(count(lit(1)).as("n"))
       val (candC, banded) = contentCandidates(s, dir, c, 4, 2)
@@ -303,7 +304,7 @@ object Dedup {
         .filter(col("jaccard") >= 0.5)
       val diagC = c.filter(col("n_docs") >= 2)
         .join(banded, "cid").select(col("cid"), lit(1.0).as("jaccard"))
-      (crossC.localCheckpoint(true), diagC.localCheckpoint(true))
+      (crossC.localCheckpoint(), diagC.localCheckpoint())
     }
 
   /** (doc_id, simhash): 16-bit SimHash from per-token md5 bits (tokens
@@ -647,9 +648,9 @@ object Dedup {
     val sym = edges.unionAll(
       edges.select(col("id2").as("id1"), col("id1").as("id2")))
       .repartition(col("id1"))
-      .localCheckpoint(true)
+      .localCheckpoint()
     var labels = sym.select(col("id1").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
+      .withColumn("label", col("id")).localCheckpoint()
     var changed = 1L
     var rounds = 0
     // A fused one-join round (label-edges appended to sym so pointer
@@ -687,7 +688,7 @@ object Dedup {
           (least(col("label"), col("nmin"), col("plabel")) < col("label"))
             .as("chg"))
         .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true)
+        .localCheckpoint()
       changed = Option(obs.get("n")).filterNot(_ == null)
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       labels = next.select("id", "label")
@@ -729,9 +730,9 @@ object Dedup {
     * (one row per vector), the tag by distinct vectors.
     */
   private def taggedVecs(s: SparkSession, dir: String): DataFrame =
-    Memo(s, ("Dedup.taggedVecs", dir))(
+    Memo.over(s, "Dedup.taggedVecs", Tables.embeddingsFile(dir), Tables.clustered(dir))(
       tagVecs(Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-        .localCheckpoint(true))
+        .localCheckpoint())
 
   private def tagVecs(raw: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("embedding")

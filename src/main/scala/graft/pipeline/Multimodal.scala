@@ -40,14 +40,14 @@ object Multimodal {
     * a media table on disk costs).
     */
   def payloads(s: SparkSession, dir: String): DataFrame =
-    Memo(s, ("Multimodal.payloads", dir)) {
+    Memo.over(s, "Multimodal.payloads", s"$dir/documents.parquet") {
       import s.implicits._
       Tables.documents(s, dir)
         .select(col("doc_id"))
         .as[Long]
         .mapPartitions(it => it.map(id => (id, MediaGen.pngPayload(id))))
         .toDF("doc_id", "payload")
-        .localCheckpoint(true)
+        .localCheckpoint()
     }
 
   /** Binary payload → per-partition batched decode → typed metadata. */
@@ -189,14 +189,14 @@ object Multimodal {
     * payloads.
     */
   def audioPayloads(s: SparkSession, dir: String): DataFrame =
-    Memo(s, ("Multimodal.audioPayloads", dir)) {
+    Memo.over(s, "Multimodal.audioPayloads", s"$dir/documents.parquet") {
       import s.implicits._
       Tables.documents(s, dir)
         .select(col("doc_id"))
         .as[Long]
         .mapPartitions(it => it.map(id => (id, MediaGen.wavPayload(id))))
         .toDF("doc_id", "payload")
-        .localCheckpoint(true)
+        .localCheckpoint()
     }
 
   /** Container metadata from the REAL javax.sound decode — the

@@ -92,7 +92,7 @@ object Pca {
     */
   def trainComponents(s: SparkSession, dir: String,
                       k: Int = PcaK): IndexedSeq[(Double, IndexedSeq[Double])] =
-    Memo(s, ("Pca.trainComponents", dir, k)) {
+    Memo.over(s, "Pca.trainComponents", Tables.embeddingsFile(dir), Tables.clustered(dir), k) {
       // collect the 2080-row long form into the dense symmetric matrix
       val c = Array.ofDim[Double](Dim, Dim)
       covariance(s, dir).collect().foreach { r =>

@@ -356,7 +356,8 @@ object Similarity {
     */
   private def cells(s: SparkSession, dir: String,
                     numCells: Int = NumCells): DataFrame =
-    Memo(s, ("Similarity.cells", dir, numCells))(
+    Memo.over(s, "Similarity.cells", Tables.embeddingsFile(dir), Tables.clustered(dir),
+        numCells)(
       assignTo(withNorm(s, dir), formulaCentroids(numCells)).localCheckpoint())
 
   /** Formula-centroid cell assignment over ANY (vec_id, embedding)
@@ -455,9 +456,8 @@ object Similarity {
     */
   private def trainedStore(s: SparkSession, tag: String, dir: String,
                            params: Any*)(build: String => Unit): String =
-    graft.Artifact(s, tag,
-      s"${dir.stripSuffix(Tables.ClusteredTag)}/embeddings.parquet",
-      (dir.endsWith(Tables.ClusteredTag) +: params): _*)(build)
+    graft.Artifact(s, tag, Tables.embeddingsFile(dir),
+      (Tables.clustered(dir) +: params): _*)(build)
 
   /** Write-once (cell, centroid) table: the first call runs `train` and
     * persists it as parquet; every later call — a new session or JVM
@@ -1103,7 +1103,7 @@ object Similarity {
     * (128 doubles), trained once and broadcast.
     */
   private def sq8Stats(s: SparkSession, dir: String): (IndexedSeq[Double], IndexedSeq[Double]) =
-    Memo(s, ("Similarity.sq8Stats", dir)) {
+    Memo.over(s, "Similarity.sq8Stats", Tables.embeddingsFile(dir), Tables.clustered(dir)) {
       val rows = Tables.embeddings(s, dir)
         .select(posexplode(col("embedding")))
         .toDF("j", "x")
@@ -1251,7 +1251,8 @@ object Similarity {
     */
   private def recallOf(s: SparkSession, dir: String, k: Int,
                        legs: Seq[(String, Boolean, () => DataFrame)]): DataFrame = {
-    val truth = Memo(s, ("Similarity.recallTruth", dir, k))(
+    val truth = Memo.over(s, "Similarity.recallTruth", Tables.embeddingsFile(dir),
+        Tables.clustered(dir), k)(
       bruteForce(s, dir).filter(col("rnk") <= k)
         .select("qid", "vec_id").localCheckpoint())
     val tr = truth.groupBy("qid").agg(count(lit(1)).as("n_truth"))

@@ -399,7 +399,7 @@ object TextAnalysis {
       .withColumn("csz", count(lit(1)).over(wCtx))
       .filter(col("csz") >= 2)
       .select(col("doc_id"), col("p"), col("rank"), col("csz"))
-      .localCheckpoint(true)
+      .localCheckpoint()
     var h = seed
     while (h < k) {
       val right = active.select(col("doc_id"), (col("p") - h).as("p"),
@@ -421,7 +421,7 @@ object TextAnalysis {
         .filter(col("csz2") >= 2)
         .select(col("doc_id"), col("p"), col("nrank").as("rank"),
           col("csz2").as("csz"))
-        .localCheckpoint(true)
+        .localCheckpoint()
       h *= 2
     }
     // duplicated k-window starts = surviving classes with >= minCount

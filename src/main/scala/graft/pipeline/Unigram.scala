@@ -76,7 +76,7 @@ object Unigram {
     * unigram_train / unigram_tokens from the one model.
     */
   def learnedPieces(s: SparkSession, dir: String): Seq[(String, Long)] =
-    Memo(s, ("Unigram.learnedPieces", dir)) {
+    Memo.over(s, "Unigram.learnedPieces", s"$dir/documents.parquet") {
       val head = vocab(s, dir).take(Bpe.DriverVocabCap + 1)
       val words = head.map(r => (r.getString(0), r.getLong(1)))
       if (head.length <= Bpe.DriverVocabCap) emLoop(words, distributed = None)

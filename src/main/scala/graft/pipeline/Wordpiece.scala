@@ -50,7 +50,7 @@ object Wordpiece {
 
   def learnedMerges(s: SparkSession, dir: String,
                     merges: Int = Merges): Seq[Merge] =
-    Memo(s, ("Wordpiece.learnedMerges", dir, merges)) {
+    Memo.over(s, "Wordpiece.learnedMerges", s"$dir/documents.parquet", merges) {
       val head = Bpe.vocab(s, dir).select("w", "freq").take(DriverVocabCap + 1)
       if (head.length <= DriverVocabCap)
         driverLoop(head.map(r => (r.getString(0), r.getLong(1))), merges)

@@ -45,10 +45,18 @@ class ArtifactSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new File(stage))
   }
 
-  /** Half of the sf0.001 tables by id parity: generation 0 or 1. */
+  /** Half of the sf0.001 tables by id parity: generation 0 or 1. `tpch`
+    * splits lineitem by supplier (an order split keeps every trading
+    * nation pair, so both halves rank alike) and copies the other TPC-H
+    * tables.
+    */
   private def writeGeneration(dir: String, gen: Int, tables: Seq[String]): Unit = {
     val parity = (c: String) => col(c) % 2 === gen
     tables.foreach {
+      case "tpch" =>
+        writeSource(Tables.lineitem(spark, sf).filter(parity("l_suppkey")), dir, "lineitem")
+        Seq("orders", "customer", "supplier", "part", "nation", "region").foreach(t =>
+          writeSource(spark.read.parquet(s"$sf/$t.parquet"), dir, t))
       case "events" =>
         writeSource(Tables.events(spark, sf).filter(parity("event_id"))
           .select(col("event_id"), col("ts_ns").as("ts"), col("user_id"),
@@ -85,15 +93,48 @@ class ArtifactSpec extends AnyFunSuite {
       (s, d) => Similarity.trainedCentroidsSampled(s, d, k = 4, iters = 1, samplePct = 50)),
     ("Similarity PQ codebooks", V, (s, d) => Similarity.trainedPqCodebooks(s, d, iters = 1)))
 
-  for ((name, tables, read) <- stores)
+  private val T = Seq("tpch")
+
+  // one case per source-keyed memo, read through an entry that uses it,
+  // and the Graph entries that materialize inside the query
+  private val memos: Seq[(String, Seq[String], String)] = Seq(
+    ("Memo Dedup.collapsed", D, "dedup_containment"),
+    ("Memo Dedup.candidates", D, "dedup_minhash_lsh"),
+    ("Memo Dedup.verified", D, "dedup_ngram_jaccard"),
+    ("Memo Dedup.taggedVecs", V, "dedup_embedding"),
+    ("Memo Graph.supportedEdges", T, "q_components"),
+    ("Memo Similarity.cells", V, "ann_ivf"),
+    ("Memo Similarity.recallTruth", V, "ann_recall"),
+    ("Memo Similarity.sq8Stats", V, "ann_sq8"),
+    ("Memo Curation.dsirWeights", D, "doc_dsir"),
+    ("Memo Multimodal.payloads", D, "mm_decode_dims"),
+    ("Memo Multimodal.audioPayloads", D, "mm_audio_meta"),
+    ("Memo Pca.trainComponents", V, "emb_pca"),
+    ("Memo Bpe.learnedMerges", D, "bpe_train"),
+    ("Memo Wordpiece.learnedMerges", D, "wordpiece_train"),
+    ("Memo Unigram.learnedPieces", D, "unigram_train"),
+    ("Graph.pagerank", T, "q_pagerank"),
+    ("Graph.triangleCount", T, "q_triangle_count"))
+
+  private val cases = stores ++ memos.map { case (name, tables, entry) =>
+    (s"$name ($entry)", tables, (s: SparkSession, d: String) => rows(SparkEntry.queries(entry)(s, d)))
+  }
+
+  for ((name, tables, read) <- cases)
     test(s"$name: a rewritten source is read fresh, not from the stale store") {
-      val dir = SparkFixture.tmp("artifact_src_" + name.replaceAll("[^A-Za-z0-9]", "_"))
+      val tag = name.replaceAll("[^A-Za-z0-9]", "_")
+      val dir = SparkFixture.tmp("artifact_src_" + tag)
       writeGeneration(dir, 0, tables)
       val before = read(spark, dir)
       writeGeneration(dir, 1, tables)
       val after = read(spark, dir)
-      // the oracle: the same store built from scratch over the new source
-      val want = read(session(freshRoot()), dir)
+      // the oracle: the same read over a dir that only ever held the new
+      // generation, in a fresh store root (Spark's cache is shared by
+      // every session and matches plans by path, so a fresh root alone
+      // would not do)
+      val fresh = SparkFixture.tmp("artifact_gen1_" + tag)
+      writeGeneration(fresh, 1, tables)
+      val want = read(session(freshRoot()), fresh)
       assert(after != before, "the two generations must differ")
       assert(after == want, "the store served the old source")
     }

@@ -64,7 +64,7 @@ class BehaviorSpec extends AnyFunSuite {
   }
 
   test("sessionize invariants: gaps split, coverage is exact") {
-    val sess = Behavior.sessionize(spark, sf).cache()
+    val sess = Behavior.sessionize(spark, sf).localCheckpoint()
     val ev = Tables.events(spark, sf)
     // every event is inside exactly one of its user's sessions
     assert(sess.agg(sum("n_events")).collect()(0).getLong(0) === ev.count())
@@ -81,7 +81,6 @@ class BehaviorSpec extends AnyFunSuite {
     val spanViol = sess.filter(
       col("end_us") - col("start_us") > (col("n_events") - 1) * gapUs)
     assert(spanViol.count() === 0)
-    sess.unpersist()
   }
 
   test("a smaller gap only splits sessions, never merges them") {
@@ -117,7 +116,7 @@ class BehaviorSpec extends AnyFunSuite {
   }
 
   test("retention cell (c, 0) counts every user of cohort week c") {
-    val ret = Behavior.retention(spark, sf).cache()
+    val ret = Behavior.retention(spark, sf).localCheckpoint()
     // offset-0 cells partition the user population: every user is active
     // in their own first week by definition
     val week0 = ret.filter(col("week_offset") === 0)
@@ -130,6 +129,5 @@ class BehaviorSpec extends AnyFunSuite {
     val viol = ret.join(cohortSize, Seq("cohort_week"))
       .filter(col("n_users") > col("cohort_n"))
     assert(viol.count() === 0)
-    ret.unpersist()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.SparkListenerApplicationEnd
@@ -7,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import SparkFixture.spark
 
 /** Contracts of the driver-side execution layer: [[Memo]] is scoped to
-  * (session, key) and dies with its application; [[Par]] runs every
+  * (session, key) and dies with its application, and [[Memo.over]]
+  * rebuilds a value whose source changed; [[Par]] runs every
   * thunk under the caller's CURRENT job group, not the group of
   * whichever query first created the pooled thread.
   */
@@ -67,6 +70,65 @@ class ExecSpec extends AnyFunSuite {
     assert(got === (0 until 12).map(i => outer(i)))
     assert(outerBuilds.get === 3)
     assert(innerBuilds.get === 2)
+  }
+
+  /** A source file holding `byte`, its mtime moved forward on every
+    * rewrite (a same-size rewrite in place, as a non-Spark writer does).
+    */
+  private def writeSource(path: java.nio.file.Path, byte: Int): Unit = {
+    val before = if (Files.exists(path)) Files.getLastModifiedTime(path).toMillis else 0L
+    Files.write(path, Array.fill[Byte](64)(byte.toByte))
+    Files.setLastModifiedTime(path, FileTime.fromMillis(before + 10000L))
+  }
+
+  private def source(name: String): String = {
+    val dir = Files.createDirectories(Paths.get(SparkFixture.tmp(uniq(name))))
+    val src = dir.resolve("table.parquet")
+    writeSource(src, 1)
+    src.toString
+  }
+
+  test("Memo.over: one instance per (session, tag, source, params)") {
+    val src = source("over_same")
+    val a = Memo.over(spark, "over", src, 1)(new Object)
+    assert(Memo.over(spark, "over", src, 1)(new Object) eq a)
+    assert(!(Memo.over(spark, "over", src, 2)(new Object) eq a))
+    assert(!(Memo.over(spark, "other", src, 1)(new Object) eq a))
+  }
+
+  test("Memo.over: a rewritten source rebuilds, replacing the superseded entry") {
+    val s = spark.newSession()
+    val src = source("over_rewrite")
+    val a = Memo.over(s, "over", src)(new Object)
+    assert(Memo.entries(s) === 1L)
+    writeSource(Paths.get(src), 2)
+    val b = Memo.over(s, "over", src)(new Object)
+    assert(!(b eq a), "a rewritten source must not be served the old value")
+    assert(Memo.over(s, "over", src)(new Object) eq b)
+    assert(Memo.entries(s) === 1L, "the superseded entry is gone")
+  }
+
+  test("Memo.over: a new session gets its own entries") {
+    val src = source("over_session")
+    val a = Memo.over(spark, "over", src)(new Object)
+    val other = spark.newSession()
+    val b = Memo.over(other, "over", src)(new Object)
+    assert(!(b eq a))
+    assert(Memo.over(other, "over", src)(new Object) eq b)
+    assert(Memo.entries(other) === 1L)
+  }
+
+  test("Memo.over: a build that throws leaves no entry; the next caller rebuilds") {
+    val s = spark.newSession()
+    val src = source("over_fail")
+    val builds = new AtomicInteger
+    intercept[IllegalStateException] {
+      Memo.over(s, "over", src) { builds.incrementAndGet(); throw new IllegalStateException("boom") }
+    }
+    assert(Memo.entries(s) === 0L)
+    assert(Memo.over(s, "over", src) { builds.incrementAndGet(); "ok" } === "ok")
+    assert(Memo.over(s, "over", src) { builds.incrementAndGet(); "again" } === "ok")
+    assert(builds.get === 2)
   }
 
   test("Par: thunks see the caller's current job group (A, then B, then none)") {

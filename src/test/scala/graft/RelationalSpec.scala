@@ -165,13 +165,10 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("rollupRevenue: levels are consistent and run as one Expand pass") {
-    // plan shape FIRST: once .cache() registers the logical plan, every
-    // later identical frame resolves to InMemoryRelation and the explain
-    // repeats nodes per AQE stage
     val plan = planOf(Relational.rollupRevenue(spark, sf))
     assert("""\(\d+\) Expand""".r.findAllIn(plan).length === 1, plan)
     assert("""\(\d+\) Scan parquet""".r.findAllIn(plan).length === 4, plan)
-    val df = Relational.rollupRevenue(spark, sf).cache()
+    val df = Relational.rollupRevenue(spark, sf).localCheckpoint()
     // grand total (gid=3) equals the sum of the leaf level (gid=0)
     val grand = df.filter(col("gid") === 3).collect()
     assert(grand.length === 1)
@@ -185,18 +182,16 @@ class RelationalSpec extends AnyFunSuite {
     val mismatch = df.filter(col("gid") === 1).join(regionFromLeaves, "r_name")
       .filter(col("n_orders") =!= col("n"))
     assert(mismatch.count() === 0)
-    df.unpersist()
   }
 
   test("cubeEvents covers all 4 grouping sets over the full event count") {
-    val df = Relational.cubeEvents(spark, sf).cache()
+    val df = Relational.cubeEvents(spark, sf).localCheckpoint()
     val total = Tables.events(spark, sf).count()
     for (gid <- 0 to 3) {
       val n = df.filter(col("gid") === gid)
         .agg(sum("n_events")).collect()(0).getLong(0)
       assert(n === total, s"gid=$gid level must cover every event")
     }
-    df.unpersist()
   }
 
   test("windowRangeFrame equals the brute-force time-band self-join") {
@@ -216,7 +211,7 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("windowNtile: quartiles are balanced, ranks bounded") {
-    val df = Relational.windowNtile(spark, sf).cache()
+    val df = Relational.windowNtile(spark, sf).localCheckpoint()
     // ntile(4) sizes within an event_type differ by at most 1
     val sizes = df.groupBy("event_type", "quartile").count()
       .groupBy("event_type")
@@ -229,7 +224,6 @@ class RelationalSpec extends AnyFunSuite {
       col("cume") <= 0 || col("cume") > 1).count() === 0)
     val tops = df.groupBy("event_type").agg(max("cume").as("m"))
     assert(tops.filter(col("m") =!= 1.0).count() === 0)
-    df.unpersist()
   }
 
   test("pivotEventCounts: row sums equal per-user event counts, no distinct pre-pass") {

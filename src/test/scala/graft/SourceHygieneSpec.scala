@@ -14,7 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * sources also carry no absolute checkout path: stores live under
   * `spark.graft.store.root`, and specs use [[SparkFixture.tmp]]. Which
   * rollup store serves a query is decided in plans/RollupServing.scala
-  * alone.
+  * alone. Materialization has one rule: inside a query an eager
+  * `localCheckpoint()` (no `.cache()`, whose plan-matched entries
+  * outlive the session and serve a rewritten table's old rows), across
+  * queries [[Memo.over]] keyed on the source table (no tuple key over a
+  * dataset dir). The raw-sample covering-step law is written once, in
+  * `Promql.coveringSteps`.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -32,7 +37,9 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   for ((banned, why) <- Seq(
          "ExecutionContext.Implicits.global" -> "run driver-side work through graft.Par",
-         "System.identityHashCode" -> "key memos through graft.Memo")) {
+         "System.identityHashCode" -> "key memos through graft.Memo",
+         ".cache()" -> "materialize with localCheckpoint(), or across queries with Memo.over",
+         "localCheckpoint(true)" -> "write localCheckpoint(): eager is its default")) {
     test(s"no main source uses $banned") {
       val hits = sources.filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(banned))
       assert(hits.isEmpty, s"$why: $hits")
@@ -56,6 +63,23 @@ class SourceHygieneSpec extends AnyFunSuite {
       re <- decision if re.findFirstIn(text).isDefined
     } yield s"$p: $re"
     assert(hits.isEmpty, s"decide rollup serving in plans/RollupServing.scala: $hits")
+  }
+
+  test("no memo over a dataset dir is keyed on a tuple") {
+    val tupleKey = """Memo\(\s*\w+\s*,\s*\(\s*"[^"]*"\s*,\s*dir""".r
+    val hits = sources.filter(p =>
+      tupleKey.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+    assert(hits.isEmpty, s"key a value derived from a table with Memo.over: $hits")
+  }
+
+  test("operators/ write the raw covering-step law once") {
+    val law = """val kM(in|ax)\b""".r
+    val hits = for {
+      p <- sources if p.toString.contains("graft/operators/")
+      m <- law.findAllIn(new String(Files.readAllBytes(p), "UTF-8"))
+    } yield s"${p.getFileName}: $m"
+    assert(hits === Seq("Promql.scala: val kMin", "Promql.scala: val kMax"),
+      "explode raw samples through Promql.coveringSteps")
   }
 
   test("no main or test source hardcodes the checkout path") {

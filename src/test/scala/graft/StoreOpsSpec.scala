@@ -51,7 +51,7 @@ class StoreOpsSpec extends AnyFunSuite {
 
   test("upsert: latest-version resolution applies every delta row and only those") {
     val base = UpsertStore.base(spark, sf)
-    val merged = UpsertStore.upsertLatest(spark, sf).cache()
+    val merged = UpsertStore.upsertLatest(spark, sf).localCheckpoint()
     assert(merged.count() === base.count()) // upsert never changes the key set
     val v2 = merged.filter(col("version") === 2L)
     assert(v2.count() === UpsertStore.delta(spark, sf).count())
@@ -61,23 +61,21 @@ class StoreOpsSpec extends AnyFunSuite {
       .join(base.alias("b"), "event_id")
       .filter(abs(col("m.value") - (col("b.value") + 1000.0)) > 1e-9)
     assert(joined.count() === 0L)
-    merged.unpersist()
   }
 
   test("upsert with tombstones: winning deletes drop keys, update-then-delete chains resolve to delete") {
     val base = UpsertStore.base(spark, sf)
-    val merged = UpsertStore.upsertTombstone(spark, sf).cache()
+    val merged = UpsertStore.upsertTombstone(spark, sf).localCheckpoint()
     val deletedKeys = base.filter(col("user_id") % 13 === 0).count()
     assert(merged.count() === base.count() - deletedKeys)
     assert(merged.filter(col("user_id") % 13 === 0).count() === 0L)
     // keys hit only by the update batch still resolve to v2
     assert(merged.filter(col("user_id") % 7 === 0 && col("version") =!= 2L).count() === 0L)
-    merged.unpersist()
   }
 
   test("changelog: typed change rows match the batch derivations, and replaying them rebuilds the tombstone snapshot") {
     val base = UpsertStore.base(spark, sf)
-    val cdc = UpsertStore.changelog(spark, sf).cache()
+    val cdc = UpsertStore.changelog(spark, sf).localCheckpoint()
     val nKeys = base.count()
     val nUpd = base.filter(col("user_id") % 7 === 0).count()
     val nDel = base.filter(col("user_id") % 13 === 0).count()
@@ -95,7 +93,6 @@ class StoreOpsSpec extends AnyFunSuite {
       .select("event_id", "value")
     assert(replayed.exceptAll(want).count() === 0L)
     assert(want.exceptAll(replayed).count() === 0L)
-    cdc.unpersist()
   }
 
   test("time travel: snapshotAt(v) equals the v-batch resolution for every version") {

@@ -166,7 +166,7 @@ class TextAnalysisSpec extends AnyFunSuite {
 
   test("bigrams: top-k per lang on TopKPerKey, counts conserve the corpus") {
     import org.apache.spark.sql.functions._
-    val df = TextAnalysis.bigrams(spark, sf).cache()
+    val df = TextAnalysis.bigrams(spark, sf).localCheckpoint()
     // at most k rows per lang, ranks are 1..n without holes
     val k = TextAnalysis.BigramTopK
     assert(df.groupBy("lang").count().filter(col("count") > k).count() === 0)
@@ -190,7 +190,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     val plan = SparkFixture.planOf(TextAnalysis.bigrams(spark, sf))
     assert("""\(\d+\) Window""".r.findAllIn(plan).isEmpty, plan)
     assert(plan.contains("TopKPerKey"), plan)
-    df.unpersist()
   }
 
   test("dupScrub equals a driver-side canonical-span scrub replay") {
